@@ -86,7 +86,7 @@ IH_MULT = 4  # insert-heavy stream volume: events × this
 # FIXED staged topic (32 files) × snapshot target, and let the numbers
 # name the knee instead of guessing it.
 KNEE_TRIGGERS = (1, 2, 4, 8)
-KNEE_TARGETS = ("flat", "bucketed")  # + "delta" when delta-spark exists
+KNEE_TARGETS = ("flat", "bucketed")
 
 
 def _knee_target(kind: str, path: str):
@@ -99,9 +99,7 @@ def _trigger_knee(spark, work: str, src: str, parts: list[str], reps: int) -> di
     """maxFilesPerTrigger × target grid over the full 32-file staged
     stream: events/s per cell, so the knee (where batch-cost
     amortization stops paying) and the target crossover are read off
-    one table. Delta-if-available: recorded as unavailable when
-    delta-spark isn't importable (this container) rather than silently
-    absent."""
+    one table."""
     n_rows = spark.read.parquet(src).count()
     grid: dict[str, dict] = {}
     for mft in KNEE_TRIGGERS:
@@ -142,17 +140,11 @@ def _trigger_knee(spark, work: str, src: str, parts: list[str], reps: int) -> di
     if len(finals) != 1:
         raise SystemExit(f"trigger-knee final state diverged: {finals}")
     best = max(grid, key=lambda k: grid[k]["events_per_sec_median"])
-    from debezium_cdc_kafka_spark.streaming.lakehouse import delta_available
-
     return {
         "n_events": n_rows,
         "files_staged": len(parts),
         "grid": grid,
         "best_config": best,
-        "delta_target": (
-            "measured" if delta_available(spark) else "unavailable: delta-spark "
-            "not installed in this container (test_lakehouse gates the path)"
-        ),
     }
 
 

@@ -1118,6 +1118,13 @@ def _pq_codebook(emb: DataFrame) -> tuple:
         )
         .collect()
     )
+    # ci = -1: every d2 < inf test was false (null/NaN coordinate), and
+    # sorted_cids[-1] would silently train the last centroid on it
+    if any(r["ci"] < 0 for r in cent_rows):
+        raise ValueError(
+            "ann_pq_adc: null or NaN embedding coordinates match no PQ "
+            "centroid; drop or repair those vectors first"
+        )
     cent = {
         (r["j"], sorted_cids[r["ci"]]): tuple(
             float(r[f"c{i}"]) for i in range(_PQ_SUB)

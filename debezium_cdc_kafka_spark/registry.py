@@ -73,22 +73,30 @@ def _modules():
 # longer rotate it out of the gate as a side effect; changing the window is
 # an explicit edit to this list.
 #
-# Round-9 window (per VERDICT.md r8 "Next round" item 5): every
-# registered query now has a driver row (r8 closed the program at
-# 294/295, q_pca_top2_project rows-only by design), so all 50 slots are
-# deliberate re-gates (REGATE_OK in tests/test_driver_canon.py): first
-# the two queries whose code changed in r9 after their r8 rows
-# (q_dbscan_clusters — broadcast-bound shuffle_hash fallback; ann_pq_adc
-# — twopass determinism checkpoint + mode refactor), then the 46 oldest
-# rows (q_math_functions, the one r2 row the r8 rotation deferred, plus
-# all 45 r3-era first-timers never re-verified since), then the 2
-# alphabetically-first r4 rows to fill the window. Oldest-driver-row age
-# advances from r2/r3 to r4.
+# Current window: every slot is a deliberate re-gate (REGATE_OK in
+# tests/test_driver_canon.py). First the queries whose code changed
+# after their last correctness-gate row: ann_pq_adc (NaN/null
+# embeddings now raise in _pq_codebook), then the r9/r10 shuffle-removal
+# rewrites (TPC-H q02/q10/q16/q20, the k-means-cell graph and
+# cluster-quality family, graph_kcore and graph_triangle_count). Then the
+# previous window in its order (q_dbscan_clusters, q_math_functions and
+# the oldest r3 rows), truncated to fill the 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
-    "q_dbscan_clusters",
     "ann_pq_adc",
-    # --- oldest-row re-gates: the deferred r2 row + all 45 r3 rows ---
+    "q02_min_cost_supplier",
+    "q10_returned_items",
+    "q16_supplier_counts",
+    "q20_excess_inventory",
+    "q_knn_graph",
+    "q_label_propagation",
+    "q_simplified_silhouette",
+    "q_cluster_purity",
+    "q_cluster_quality_profile",
+    "graph_kcore",
+    "graph_triangle_count",
+    # --- previous window, oldest rows first ---
+    "q_dbscan_clusters",
     "q_math_functions",
     "ann_bruteforce_topk",
     "ann_filtered_topk",
@@ -126,18 +134,6 @@ GATE_ORDER: list[str] = [
     "text_bigram_logprob",
     "text_entropy",
     "text_fingerprint",
-    "text_langid",
-    "text_quality_classifier",
-    "text_quality_stats",
-    "text_redact_pii",
-    "text_repetition_filter",
-    "text_tfidf_doc_similarity",
-    "text_tfidf_top_terms",
-    "text_token_counts",
-    "text_unigram_logprob",
-    # --- next-oldest (r4) rows filling the window ---
-    "graph_association_rules",
-    "graph_pagerank_copurchase",
 ]
 
 GATE_SLOTS = 50

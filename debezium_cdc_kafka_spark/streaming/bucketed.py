@@ -6,10 +6,8 @@ micro-batch — correct, time-traveling, and the right simple default,
 but copy-on-write cost is O(|state|) per epoch, so an N-epoch backfill
 over a growing table pays O(N·|state|) total write I/O. The reference
 has the mirror-image problem at the other extreme (one SQL statement
-per message, reference app/consumer/consumer.py:55–75). The lakehouse
-targets (lakehouse.py) are the real fix on a cluster with Delta/Iceberg;
-this class is the same idea expressed in plain Parquet, and the local
-stand-in for partition-pruned MERGE:
+per message, reference app/consumer/consumer.py:55–75). This class is
+partition-pruned MERGE expressed in plain Parquet:
 
 - state is split into `n_buckets` key buckets;
 - each epoch MERGEs only the buckets its batch touches, and writes a

@@ -16,8 +16,6 @@ Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
   because plain Parquet has no MERGE. Each epoch commits a new version
   directory; a retried epoch overwrites its own version and reads the
   last version *before* it, making the merge deterministic under retries.
-  On a cluster with Delta/Iceberg, swap `apply_changes` + snapshot commit
-  for `MERGE INTO` — the decode/reduce plan is unchanged.
 """
 
 from __future__ import annotations
@@ -54,8 +52,7 @@ class ParquetSnapshotTarget:
     micro-batch cannot double-apply (SURVEY §7 "what's hard" #1).
 
     Local-mode listing uses the filesystem; on a cluster the same layout
-    works over any Hadoop FS (listing via the FileSystem API) or is
-    replaced wholesale by a Delta/Iceberg table.
+    works over any Hadoop FS (listing via the FileSystem API).
     """
 
     def __init__(self, path: str, schema: T.StructType = STATE_SCHEMA):
@@ -91,14 +88,16 @@ class ParquetSnapshotTarget:
         epoch_id: int,
         after_cols: tuple[str, ...] = ("value", "ts"),
     ) -> None:
-        """Duck-typed apply contract shared with lakehouse.DeltaMergeTarget."""
-        merge_batch(self, changes, epoch_id, after_cols)
+        """The foreachBatch body: snapshot-before-this-epoch + batch
+        changes → snapshot at this epoch."""
+        spark = changes.sparkSession
+        current = self.read(spark, before_version=epoch_id)
+        self.commit(apply_changes(current, changes, after_cols), epoch_id)
 
     def compact(self, keep_last: int = 2) -> list[int]:
         """Drop all but the newest `keep_last` versions (old snapshots only
         serve epoch-retry reads, which never reach further back than the
-        previous version). Returns the removed versions. The Delta/Iceberg
-        analogue is VACUUM."""
+        previous version). Returns the removed versions."""
         import shutil
 
         vs = self.versions()
@@ -106,20 +105,6 @@ class ParquetSnapshotTarget:
         for v in doomed:
             shutil.rmtree(os.path.join(self.path, f"v={v}"), ignore_errors=True)
         return doomed
-
-
-def merge_batch(
-    target: ParquetSnapshotTarget,
-    changes: DataFrame,
-    epoch_id: int,
-    after_cols: tuple[str, ...] = ("value", "ts"),
-) -> None:
-    """The foreachBatch body: snapshot-before-this-epoch + batch changes →
-    snapshot at this epoch."""
-    spark = changes.sparkSession
-    current = target.read(spark, before_version=epoch_id)
-    merged = apply_changes(current, changes, after_cols)
-    target.commit(merged, epoch_id)
 
 
 def run_cdc_stream(
@@ -142,8 +127,8 @@ def run_cdc_stream(
     parameterize the replicated domain (events-derived by default, the
     workload generator's customers table in pipeline.py). ``target`` may
     be any object with the ``merge_epoch(changes, epoch_id, after_cols)``
-    contract (e.g. lakehouse.DeltaMergeTarget behind its feature flag);
-    default is the ParquetSnapshotTarget at ``target_path``.
+    contract (e.g. bucketed.BucketedSnapshotTarget); default is the
+    ParquetSnapshotTarget at ``target_path``.
     """
     if target is None:
         target = ParquetSnapshotTarget(target_path, schema=state_schema)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.cdc import decode_envelope
-from .cdc_stream import STATE_SCHEMA, ParquetSnapshotTarget, merge_batch
+from .cdc_stream import STATE_SCHEMA, ParquetSnapshotTarget
 
 
 def table_name(topic: Column) -> Column:
@@ -72,7 +72,7 @@ def route_batch(
     for tbl, route in routes.items():
         sub = tagged.filter(F.col("_table") == tbl).drop("_table")
         decoded = decode_envelope(sub, schema=route.envelope_schema)
-        merge_batch(route.target(), decoded, epoch_id, route.after_cols)
+        route.target().merge_epoch(decoded, epoch_id, route.after_cols)
 
 
 def run_routed_stream(

@@ -2,15 +2,20 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from debezium_cdc_kafka_spark._proto_compat import ensure_protobuf
 from debezium_cdc_kafka_spark.oracle_check import duckdb_connect
 from debezium_cdc_kafka_spark.session import get_spark
 
-# Before the JVM starts: exports PYTHONPATH (vendored protobuf + repo root)
-# so local-mode Python workers can run transformWithStateInPandas.
-ensure_protobuf()
+# Before the JVM starts: local-mode Python workers inherit this environment
+# and unpickle package functions (e.g. stateful._update_user_stats) by
+# reference, so the repo root must be importable whatever the cwd.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -1,9 +1,11 @@
 """BucketedSnapshotTarget: per-epoch O(changed buckets) copy-on-write.
 
 Contract: identical final state to the flat ParquetSnapshotTarget under
-the same stream, idempotent under epoch retry, and — the point — a
-range-bucketed target under offset-ordered insert-heavy delivery writes
-only the TAIL buckets each epoch instead of the whole state.
+the same stream, idempotent under epoch retry and reordering (checked
+for the flat target too, against the merge_states fixpoint), and — the
+point — a range-bucketed target under offset-ordered insert-heavy
+delivery writes only the TAIL buckets each epoch instead of the whole
+state.
 """
 
 from __future__ import annotations
@@ -15,7 +17,10 @@ from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.operators.cdc import (
     decode_envelope,
+    empty_state,
     final_state_upsert,
+    materialize,
+    merge_states,
 )
 from debezium_cdc_kafka_spark.sources.cdc_events import derive_change_events
 from debezium_cdc_kafka_spark.streaming.bucketed import BucketedSnapshotTarget
@@ -71,21 +76,45 @@ def test_stream_through_bucketed_target_equals_flat(spark, tmp_path, mode):
     assert got == expected
 
 
-def test_epoch_retry_is_idempotent(spark, tmp_path):
+def _stored(state) -> dict:
+    return {r.id: (r._offset, r._deleted, r.value, r.ts) for r in state.collect()}
+
+
+# (target, n parts, schedule of (epoch_id, part) merge_epoch calls)
+@pytest.mark.parametrize(
+    "kind,n,schedule",
+    [
+        # crash-between-apply-and-commit: the newest epoch replays, then
+        # an OLD epoch replays (reads state < 0 = empty and rewrites v=0's
+        # buckets; newer v=1 still wins per-bucket resolution)
+        ("bucketed", 2, [(0, 0), (1, 1), (1, 1), (0, 0)]),
+        ("flat", 3, [(0, 0), (1, 1), (2, 2)]),
+        ("flat", 3, [(0, 0), (1, 1), (2, 2), (1, 1)]),
+        ("flat", 3, [(0, 2), (1, 0), (2, 1)]),
+        # out of order, then part 1 redelivered in a later epoch
+        ("flat", 3, [(0, 1), (1, 2), (2, 0), (3, 1)]),
+    ],
+    ids=["bucketed", "flat-in-order", "flat-replayed", "flat-out-of-order", "flat-both"],
+)
+def test_epoch_retry_is_idempotent(spark, tmp_path, kind, n, schedule):
+    """Once every part has been merged, the stored state (tombstones
+    included) equals the merge_states fixpoint over the parts, and stays
+    equal under every further replay."""
     raw = decode_envelope(derive_change_events(spark, SF_SMOKE))
-    half1 = raw.filter(F.col("offset") % 2 == 0)
-    half2 = raw.filter(F.col("offset") % 2 == 1)
-    t = BucketedSnapshotTarget(str(tmp_path / "t"), n_buckets=4)
-    t.merge_epoch(half1, 0)
-    t.merge_epoch(half2, 1)
-    after_once = _final_view(spark, t)
-    # crash-between-apply-and-commit: epoch 1 replays
-    t.merge_epoch(half2, 1)
-    assert _final_view(spark, t) == after_once
-    # replaying an OLD epoch also converges (reads state < 0 = empty,
-    # rewrites v=0's buckets; newer v=1 still wins per-bucket resolution)
-    t.merge_epoch(half1, 0)
-    assert _final_view(spark, t) == after_once
+    parts = [raw.filter(F.col("offset") % n == k) for k in range(n)]
+    expected = empty_state(spark)
+    for p in parts:
+        expected = merge_states(expected, materialize(p))
+    expected = _stored(expected)
+    path = str(tmp_path / "t")
+    t = (BucketedSnapshotTarget(path, n_buckets=4) if kind == "bucketed"
+         else ParquetSnapshotTarget(path))
+    seen = set()
+    for epoch, k in schedule:
+        t.merge_epoch(parts[k], epoch)
+        seen.add(k)
+        if len(seen) == n:
+            assert _stored(t.read(spark)) == expected, (epoch, k)
 
 
 def test_range_mode_writes_only_tail_buckets_per_epoch(spark, tmp_path):

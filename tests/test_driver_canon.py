@@ -74,17 +74,27 @@ def test_gate_window_spends_no_slot_on_already_green_rows():
         )
 
 
-# Deliberate re-verifications go here. r9: every registered query has a
-# prior driver row (the r8 gate closed the program), so ALL 50 slots are
-# deliberate re-gates — the 2 queries whose code changed in r9 after
-# their r8 rows, then the 46 oldest rows (the deferred r2
-# q_math_functions + all 45 r3 first-timers), then the 2
-# alphabetically-first r4 rows (registry.py GATE_ORDER comment).
+# Deliberate re-verifications go here. Every registered query has a
+# prior gate row, so ALL 50 slots are deliberate re-gates: first the
+# queries whose code changed after their last gate row, then the rest
+# of the previous window, oldest rows first (registry.py GATE_ORDER
+# comment).
 REGATE_OK: set[str] = {
     # code changed after last driver row
-    "q_dbscan_clusters",
     "ann_pq_adc",
-    # oldest driver rows (r2/r3)
+    "q02_min_cost_supplier",
+    "q10_returned_items",
+    "q16_supplier_counts",
+    "q20_excess_inventory",
+    "q_knn_graph",
+    "q_label_propagation",
+    "q_simplified_silhouette",
+    "q_cluster_purity",
+    "q_cluster_quality_profile",
+    "graph_kcore",
+    "graph_triangle_count",
+    # previous window (q_dbscan_clusters, q_math_functions, r3 rows)
+    "q_dbscan_clusters",
     "q_math_functions",
     "ann_bruteforce_topk",
     "ann_filtered_topk",
@@ -122,18 +132,6 @@ REGATE_OK: set[str] = {
     "text_bigram_logprob",
     "text_entropy",
     "text_fingerprint",
-    "text_langid",
-    "text_quality_classifier",
-    "text_quality_stats",
-    "text_redact_pii",
-    "text_repetition_filter",
-    "text_tfidf_doc_similarity",
-    "text_tfidf_top_terms",
-    "text_token_counts",
-    "text_unigram_logprob",
-    # next-oldest (r4) rows
-    "graph_association_rules",
-    "graph_pagerank_copurchase",
 }
 
 

@@ -142,3 +142,17 @@ def test_topk_twopass_parity_on_fixture(spark):
     direct = {tuple(r) for r in ann_pq_adc(spark, "/root/testdata/sf0.01", _topk_mode="direct").collect()}
     twopass = {tuple(r) for r in ann_pq_adc(spark, "/root/testdata/sf0.01", _topk_mode="twopass").collect()}
     assert direct == twopass
+
+
+def test_codebook_rejects_nan_embedding(spark):
+    """A NaN coordinate fails every `d2 < acc` test, leaving the argmin
+    index at -1; indexing sorted_cids[-1] would silently train that
+    group into the last centroid. It must raise instead."""
+    from debezium_cdc_kafka_spark.operators.similarity import _pq_codebook
+
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(v) for v in rng.normal(size=64)]) for i in range(40)]
+    rows[5][1][0] = float("nan")
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="NaN"):
+        _pq_codebook(emb)

@@ -80,90 +80,3 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
     )
     assert dead.count() == n_expected
     assert set(dead.columns) == {"id", "offset", "epoch"}
-
-def test_tws_running_stats_matches_legacy_api_and_batch(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor) reaches the
-    same final per-key state as the applyInPandasWithState operator and
-    the batch aggregate — one dataset, three engines' worth of paths.
-
-    The TWS Python worker speaks protobuf to the JVM; this container has
-    no protobuf pip package, but _proto_compat locates the cloud-sdk's
-    vendored runtime (relaxing its over-strict gencode version check), so
-    the runtime path executes here. Only if NO runtime can be found does
-    the test skip."""
-    import pytest
-
-    from debezium_cdc_kafka_spark._proto_compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no google.protobuf runtime available in this environment")
-    from debezium_cdc_kafka_spark.streaming.tws import running_user_stats_tws
-
-    d = str(tmp_path / "tws_stream")
-    ev = load_table(spark, SF_SMOKE, "events")
-    ev.repartition(4).write.parquet(d)
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-        )
-        q = (
-            running_user_stats_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_user_stats")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        final = spark.sql(
-            """
-            SELECT user_id, n_events, total_value, max_value FROM (
-              SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-              FROM tws_user_stats
-            ) WHERE rn = 1
-            """
-        ).collect()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-    got = {r.user_id: (r.n_events, r.total_value, r.max_value) for r in final}
-    expected = {
-        r.user_id: (r.n, round(r.s, 2), r.m)
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"), F.max("value").alias("m"))
-        .collect()
-    }
-    assert set(got) == set(expected)
-    for k in expected:
-        assert got[k][0] == expected[k][0], k
-        assert abs(got[k][1] - expected[k][1]) < 0.05, k
-        assert got[k][2] == expected[k][2], k
-
-def test_tws_plan_builds_without_protobuf(spark, tmp_path):
-    """Even without the protobuf runtime, the transformWithStateInPandas
-    plan must ANALYZE correctly (schema, grouping, output mode) — this is
-    what guarantees the operator is wired right for clusters that do have
-    the worker dependencies."""
-    from debezium_cdc_kafka_spark.streaming.tws import (
-        OUTPUT_SCHEMA,
-        running_user_stats_tws,
-    )
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    d = str(tmp_path / "tws_plan")
-    ev.limit(10).write.parquet(d)
-    stream = spark.readStream.schema(ev.schema).parquet(d)
-    out = running_user_stats_tws(stream)
-    assert out.isStreaming
-    assert out.schema == OUTPUT_SCHEMA
