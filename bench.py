@@ -45,7 +45,7 @@ HEADLINE = [
 ]
 
 # Extended set (r5, VERDICT item 6): the 5 slowest non-graph-module entries
-# from the r5 full-registry sweep (tools/sweep_timings.py at sf0.1) — the
+# from the r5 full-registry sweep (`tools/audit.py sweep` at sf0.1) — the
 # 21-query HEADLINE set predates ~250 of the 292 registered queries, so
 # regressions in the heavy tail were invisible round-over-round. These are
 # benched and reported per-query alongside the headline set; `value` stays
@@ -57,6 +57,7 @@ EXTENDED = [
     "semdedup_survivors",    # k-means-cell-bounded SemDeDup pair prune
     "q_bootstrap_ci",        # 32x Poisson-explode over orders (map-local)
     "q_jl_projection",       # 1024-literal projection tree (compile-bound)
+    "ann_pq_adc",            # build-time PQ codebook + one broadcast ADC join
 ]
 
 

@@ -409,7 +409,7 @@ def q_kmv_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     yr = F.year("l_shipdate")
     # Range form, not year(..) IN (..): the expression wrapper defeats
     # parquet pushdown (the predicate showed up in DataFilters only —
-    # tools/pushdown_audit.py, r6), while the equivalent half-open range
+    # `tools/audit.py pushdown`, r6), while the equivalent half-open range
     # on the raw column reaches PushedFilters and row-group stats skip
     # the other years' chunks at scale.
     base = (

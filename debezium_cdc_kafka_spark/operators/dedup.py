@@ -1008,7 +1008,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     count over that same partitioning, and hot shingles filter inline.
     The earlier broadcast-anti-join form re-executed a separate df
     aggregate subtree per consumer of `capped` (3 consumers: counts +
-    both join sides) — the r6 scan census (tools/exchange_audit.py)
+    both join sides) — the r6 scan census (`tools/audit.py exchange`)
     measured 12 document scans per run, and the inline form won the
     ×16-docs A/B at 43s vs 78s (lazy) vs 52s (localCheckpoint of the
     index — materializing a shingle index costs more than re-deriving

@@ -1139,10 +1139,13 @@ def _pq_codebook(emb: DataFrame) -> tuple:
 def ann_pq_adc(
     spark: SparkSession, sf_dir: str, _topk_mode: str | None = None
 ) -> DataFrame:
-    """Product-quantization ANN (Jegou et al., "Product Quantization for
-    Nearest Neighbor Search"): split each 64-d vector into {_PQ_M}
-    8-d subvectors, encode each against a {_PQ_K}-entry per-subspace
-    codebook (argmin squared-L2, seeds chosen by the same deterministic
+    """Product-quantization ANN that runs eager Spark jobs at BUILD time
+    (the codebook trains in _pq_codebook before the frame is returned).
+
+    PQ (Jegou et al., "Product Quantization for Nearest Neighbor
+    Search"): split each 64-d vector into {_PQ_M} 8-d subvectors,
+    encode each against a {_PQ_K}-entry per-subspace codebook
+    (argmin squared-L2, seeds chosen by the same deterministic
     md5 rule as [[ann_kmeans_assign]]), then answer queries by
     ASYMMETRIC distance — the query stays un-quantized, each candidate
     costs {_PQ_M} table lookups into the query's precomputed
@@ -3409,7 +3412,7 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (MI, both entropies, majority rows, totals). The static plan shows
     # the assignment subtree six times, but AQE stage reuse collapses
     # the duplicates at runtime (executed-plan audit,
-    # tools/exchange_audit.py) — an eager checkpoint here measured a
+    # `tools/audit.py exchange`) — an eager checkpoint here measured a
     # wash-to-slower (1.4 → 1.7s warm at sf0.1), so the frame stays
     # lazy and reuse carries the dedup.
     cells = (

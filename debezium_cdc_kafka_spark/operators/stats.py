@@ -290,7 +290,7 @@ def q_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the per-edge rows unpack from that 1-row aggregate
     with stack(). The earlier per-edge form (anti-join + count per edge)
     executed lineitem's count subtree three times and scanned it six —
-    caught by tools/exchange_audit.py (r6); at 100 TB this audit must
+    caught by `tools/audit.py exchange` (r6); at 100 TB this audit must
     cost exactly one pass over each fact table. This is the ingest gate
     a CDC-fed warehouse runs before publishing a snapshot — the
     reference trusts Postgres constraints for this
@@ -643,7 +643,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     # Range form, not year(..) IN (..): the wrapper defeated parquet
-    # pushdown on all four scans of this plan (tools/pushdown_audit.py,
+    # pushdown on all four scans of this plan (`tools/audit.py pushdown`,
     # r6); the half-open range on the raw column pushes and row-group
     # stats skip the other years at scale.
     pop = orders.filter(

@@ -30,7 +30,6 @@ def _initial_heap_opts(driver_mem: str) -> str:
 def get_spark(
     app_name: str = "debezium_cdc_kafka_spark",
     cpus: str | None = None,
-    ui: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -71,9 +70,9 @@ def get_spark(
         # reps at sf0.1 vs a 1.5-2s steady state. -Xms at 3/4 of -Xmx plus
         # AlwaysPreTouch moves that cost to JVM startup, once.
         .config("spark.driver.extraJavaOptions", _initial_heap_opts(driver_mem))
-        # UI off by default (test/bench noise); tools that read runtime
-        # stage metrics (tools/gen_plans_report.py) opt in via ui=True
-        .config("spark.ui.enabled", "true" if ui else "false")
+        # UI off (test/bench noise); stage metrics are still read from the
+        # driver's status store (plans.inspect.group_stages)
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # r9 note (guide §6): a spark.sql.files.minPartitionNum floor at
         # the core count was A/B-tested and REJECTED — it parallelizes the

@@ -1,22 +1,35 @@
-"""Unit tests for the plan-audit tool parsers (r6).
+"""Unit tests for the plan-audit parsers and the audit tool's plumbing.
 
 SCALE.md's scan-census and duplicate-shuffle claims are produced by
-tools/exchange_audit.py, and the pushdown triage by
-tools/pushdown_audit.py. Their value is entirely in the parsing: a
-regex regression would silently turn every future audit into a false
-"all clean". These tests pin the parsers on synthetic plan strings —
-no Spark session needed.
+`tools/audit.py exchange`, the pushdown triage by `audit.py pushdown`
+and the broadcast triage by `audit.py broadcast`. Their value is
+entirely in the parsing: a regex regression would silently turn every
+future audit into a false "all clean". The parser tests pin
+plans/inspect.py on synthetic plan strings — no Spark session needed.
 """
 
 from __future__ import annotations
 
+import importlib
 import pathlib
 import sys
 
+import pytest
+
+from debezium_cdc_kafka_spark import catalog
+from debezium_cdc_kafka_spark.plans.inspect import (
+    _cols,
+    _norm,
+    _split_preds,
+    audit_plan,
+    residual_preds,
+    unbounded_broadcast_generates,
+)
+from tests.conftest import SF_SMOKE
+
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
 
-from exchange_audit import _norm, audit_plan  # noqa: E402
-from pushdown_audit import _cols, _split_preds  # noqa: E402
+import audit  # noqa: E402
 
 
 def _plan(*lines: str) -> str:
@@ -114,9 +127,7 @@ def test_cols_extracts_catalyst_column_refs():
     assert _cols("(1 = 1)") == set()
 
 
-def test_residual_preds_catches_mixed_wrapper(monkeypatch=None):
-    from pushdown_audit import residual_preds
-
+def test_residual_preds_catches_mixed_wrapper():
     # ADVICE r6 blind spot: pushed range + unpushed year() wrapper on the
     # SAME column must still flag the wrapper
     data = [
@@ -151,20 +162,110 @@ def test_residual_preds_catches_mixed_wrapper(monkeypatch=None):
     ]
 
 
-def test_trailing_flag_without_value_exits_with_usage(monkeypatch):
+def test_trailing_flag_without_value_exits_with_usage(capsys):
     """`--json` as the last argument (or followed by another flag) must
     exit with a usage message, not IndexError, and must not silently
     consume a flag as its value (ADVICE r7)."""
-    import pytest
+    for bad in (["exchange", "--json"], ["sweep", "--json"],
+                ["sweep", "--skip", "--json", "out"]):
+        with pytest.raises(SystemExit) as e:
+            audit.parse_args(bad)
+        assert e.value.code != 0
+        assert "usage" in capsys.readouterr().err
 
-    import exchange_audit
-    import sweep_timings
 
-    for tool, bad in [
-        (exchange_audit, ["exchange_audit.py", "--json"]),
-        (sweep_timings, ["sweep_timings.py", "--json"]),
-        (sweep_timings, ["sweep_timings.py", "--skip", "--json", "out"]),
-    ]:
-        monkeypatch.setattr(sys, "argv", bad)
-        with pytest.raises(SystemExit, match="usage"):
-            tool.main()
+def test_flag_value_is_not_taken_as_sf():
+    # ADVICE r6: the per-script parsers left `--json OUT` / `--only a,b`
+    # values among the positionals, so OUT became sf_dir
+    args = audit.parse_args(["analysis", "--json", "o.json"])
+    assert (args.sf, args.json) == (audit.SF_TIMING, "o.json")
+    args = audit.parse_args(["serial", "--only", "q01_pricing_summary", "--json", "o"])
+    assert args.sf == audit.SF_TIMING and args.names == ["q01_pricing_summary"]
+
+
+def test_structural_default_sf_ignores_env_fixture(monkeypatch):
+    # $SPARK_GRAFT_SF_DIR may name a scale fixture with no sf0.01 beside
+    # it; the structural commands must still default to the sf0.01 fixture
+    monkeypatch.setattr(catalog, "DEFAULT_SF_DIR", "/tmp/scale_fixtures/full256")
+    try:
+        importlib.reload(audit)
+        assert audit.parse_args(["analysis"]).sf == "/tmp/scale_fixtures/full256"
+        sf = audit.parse_args(["exchange"]).sf
+        assert sf.endswith("/sf0.01") and "scale_fixtures" not in sf
+    finally:
+        monkeypatch.undo()
+        importlib.reload(audit)
+
+
+def test_report_refuses_a_partial_query_set(capsys):
+    # --report rewrites the whole PLANS.md table
+    for bad in (["plans", "--report", "--only", "q01_pricing_summary"],
+                ["plans", "--report", "--skip", "q01_pricing_summary"]):
+        with pytest.raises(SystemExit) as e:
+            audit.parse_args(bad)
+        assert e.value.code != 0
+        assert "--report" in capsys.readouterr().err
+
+
+def test_unknown_only_name_exits_naming_it(capsys):
+    with pytest.raises(SystemExit) as e:
+        audit.main(["exchange", "--only", "q01_pricing_summary,no_such_query"])
+    assert e.value.code != 0
+    assert "no_such_query" in capsys.readouterr().err
+
+
+def _bcast(*below: str) -> str:
+    return _plan(
+        "+- BroadcastHashJoin [k#1], [k#2], Inner, BuildRight",
+        "   :- FileScan parquet [k#1] Location: X[file:/t/orders.parquet]",
+        "   +- BroadcastExchange HashedRelationBroadcastMode(List(k#2)), [plan_id=3]",
+        *below,
+    )
+
+
+def test_broadcast_over_unbounded_explode_is_flagged():
+    plan = _bcast(
+        "      +- Generate explode(parts#5), [k#1], false, [part#6]",
+        "         +- FileScan parquet [k#1,parts#5] Location: X[file:/t/lineitem.parquet]",
+    )
+    assert unbounded_broadcast_generates(plan) == [
+        "+- Generate explode(parts#5), [k#1], false, [part#6]"
+    ]
+
+
+@pytest.mark.parametrize("bound", ["HashAggregate(keys=[k#2], functions=[])",
+                                   "GlobalLimit 100, 0"])
+def test_broadcast_over_bounded_explode_not_flagged(bound):
+    plan = _bcast(
+        f"      +- {bound}",
+        "         +- Generate explode(parts#5), [k#1], false, [part#6]",
+        "            +- FileScan parquet [k#1,parts#5] Location: X[file:/t/lineitem.parquet]",
+    )
+    assert unbounded_broadcast_generates(plan) == []
+    # a Generate beside the broadcast (not under it) is not its input
+    assert unbounded_broadcast_generates(_plan(
+        "+- BroadcastExchange HashedRelationBroadcastMode(List(k#2))",
+        "   +- FileScan parquet [k#2] Location: X[file:/t/part.parquet]",
+        "+- Generate explode(parts#5), [k#1], false, [part#6]",
+    )) == []
+
+
+def test_query_loop_releases_pinned_blocks(spark):
+    """text_tfidf_doc_similarity localCheckpoints at build time; the
+    audit loop must free those blocks before the next query (the r9 leak:
+    ann_pq_adc read 64 s mid-sweep against 5.1 s isolated)."""
+    jsc = spark.sparkContext._jsc
+    pinned = []
+
+    def build_only(name, build):
+        build()
+        pinned.append(len(jsc.getPersistentRDDs()))
+        return {}
+
+    try:
+        rows = dict(audit.each_query(spark, SF_SMOKE, ["text_tfidf_doc_similarity"], build_only))
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == {"text_tfidf_doc_similarity": {}}
+    assert pinned and pinned[0] > 0  # the build really pinned blocks
+    assert len(jsc.getPersistentRDDs()) == 0

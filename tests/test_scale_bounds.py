@@ -17,7 +17,9 @@ inflating ratios; a real asymptote break (linear → quadratic shows up
 as ≥16× the linear time with these corpus sizes) clears any ceiling.
 
 Run: python -m pytest tests/test_scale_bounds.py -m scale -v
-(~5–10 min: builds the ×4 fixture once, then one timed pair per family)
+(~5–10 min: builds the ×4 fixture once, then one timed pair per family).
+To keep each test's outcome and wall time as a round artifact:
+python -m pytest tests/test_scale_bounds.py -m scale --junitxml=artifacts_rN/scale_bounds.xml
 """
 
 from __future__ import annotations

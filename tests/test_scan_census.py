@@ -1,6 +1,6 @@
 """Scan-census regression guard (r6).
 
-tools/exchange_audit.py found the lazy-multi-consumer class: an
+`tools/audit.py exchange` found the lazy-multi-consumer class: an
 intermediate frame with N consumers re-executes its whole upstream —
 including the base-table scan — once per consumer. The worst offenders
 were fixed with bounded localCheckpoints or inline window caps
@@ -8,7 +8,7 @@ were fixed with bounded localCheckpoints or inline window caps
 counts in the INITIAL adaptive plan — deliberate here: the initial plan
 is a deterministic structural ceiling, unaffected by AQE's runtime
 stage-reuse variance (the EXECUTED-plan numbers live in
-tools/exchange_audit.py; see SCALE.md "Correction: the audit now reads
+`tools/audit.py exchange`; see SCALE.md "Correction: the audit now reads
 the EXECUTED plan") — so an innocent-looking refactor can't silently
 reintroduce a 20-scans-of-lineitem plan. No action is run: the initial
 plan is readable straight off the unexecuted QueryExecution (the r6
@@ -25,11 +25,10 @@ semdedup single-file spread.
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
 from debezium_cdc_kafka_spark import registry
+from debezium_cdc_kafka_spark.plans.inspect import executed_plan, scan_census
 
 SF = "/root/testdata/sf0.001"
 
@@ -69,28 +68,13 @@ CEILINGS = {
     "dedup_embedding_cosine_banded": ("embeddings", 6),
 }
 
-SCAN_LOC = re.compile(r"/(\w+)\.parquet")
-
-
-def _initial_plan(df) -> str:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    cut = plan.find("== Initial Plan ==")
-    return plan[:cut] if cut != -1 else plan
-
-
 @pytest.mark.parametrize("name", sorted(CEILINGS))
 def test_scan_count_ceiling(spark, name):
     table, ceiling = CEILINGS[name]
-    plan = _initial_plan(registry.all_queries()[name](spark, SF))
-    n = sum(
-        1
-        for ln in plan.splitlines()
-        if "FileScan parquet" in ln
-        and (m := SCAN_LOC.search(ln))
-        and m.group(1) == table
-    )
+    plan = executed_plan(registry.all_queries()[name](spark, SF))
+    n = scan_census(plan).get(table, 0)
     assert n <= ceiling, (
         f"{name} scans {table} {n}x (ceiling {ceiling}) — a lazy "
         "multi-consumer frame is re-executing its upstream again; see "
-        "SCALE.md 'scan census' and tools/exchange_audit.py"
+        "SCALE.md 'scan census' and `tools/audit.py exchange`"
     )
