@@ -24,8 +24,12 @@ Two semantic modes, both oracle-tested:
 Scale notes: every step is a narrow projection, a window over the key, or
 a key-partitioned join — at 100 TB the only shuffle is on the CDC key
 (Debezium keys messages by PK, so the stream is already key-partitioned;
-`repartition(key)` before the window reuses that partitioning). The merge
-is `foreachBatch`-friendly: see streaming/cdc_stream.py.
+`repartition(key)` before the window reuses that partitioning). A merge
+is ONE aggregate, so one shuffle on the key: events are projected to state
+rows (`_state_rows`) and unioned with the stored state before the single
+per-key max-by-offset reduction (`_latest`), instead of reducing the batch
+and then the union in two exchanges. The merge is `foreachBatch`-friendly:
+see streaming/cdc_stream.py.
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
@@ -117,32 +122,55 @@ def last_event_per_key(changes: DataFrame, key: str = "id", order: str = "offset
 # events are RETAINED as tombstone rows (_deleted=true) so that a stale
 # re-delivered event with a lower offset can never resurrect a deleted key —
 # this makes the state merge commutative and idempotent across batches, not
-# just replay-safe when batches arrive in order.
-STATE_COLS = ("id", "value", "ts", "_offset", "_deleted")
+# just replay-safe when batches arrive in order. This is the events-derived
+# domain's state; other domains swap the after-image columns (e.g.
+# pipeline.CUSTOMERS_STATE_SCHEMA) and keep id/_offset/_deleted.
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("_offset", T.LongType()),
+        T.StructField("_deleted", T.BooleanType()),
+    ]
+)
 
 
 AFTER_COLS = ("value", "ts")  # events-derived domain's after-image columns
 
 
-def materialize(changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS) -> DataFrame:
-    """A batch of decoded change events → CDC state fragment (one row per
-    key: latest event's after-image, or a tombstone for deletes).
+def _state_rows(changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS) -> DataFrame:
+    """Each well-formed change event as a state row: (id, after-image
+    columns, offset → _offset, op = 'd' → _deleted). A narrow projection:
+    no shuffle, and a delete's null after-image becomes a tombstone."""
+    return well_formed(changes).select(
+        "id",
+        *[F.col(f"after.{c}").alias(c) for c in after_cols],
+        F.col("offset").alias("_offset"),
+        (F.col("op") == "d").alias("_deleted"),
+    )
 
-    Reduction is ``max_by(struct, offset)`` — a hash AGGREGATE, so Catalyst
-    plans map-side partial reduction and the shuffle carries one candidate
-    row per key per partition. The row_number-window alternative
+
+def _latest(rows: DataFrame) -> DataFrame:
+    """Per key, the state row with the highest ``_offset``.
+
+    ``max_by(struct, _offset)`` is a hash AGGREGATE: Catalyst plans a
+    map-side partial reduction, so the one shuffle on the key carries one
+    candidate row per key per partition. The row_number-window alternative
     (`last_event_per_key`) sorts every event within each key post-shuffle —
     same answer (verified), strictly worse movement at scale."""
-    wf = well_formed(changes)
-    last = wf.groupBy("id").agg(
-        F.expr("max_by(struct(op, after, offset), offset)").alias("_last")
+    payload = [c for c in rows.columns if c != "id"]
+    last = rows.groupBy("id").agg(
+        F.max_by(F.struct(*payload), F.col("_offset")).alias("_last")
     )
-    return last.select(
-        "id",
-        *[F.col(f"_last.after.{c}").alias(c) for c in after_cols],
-        F.col("_last.offset").alias("_offset"),
-        (F.col("_last.op") == "d").alias("_deleted"),
-    )
+    return last.select("id", *[F.col(f"_last.{c}").alias(c) for c in payload])
+
+
+def materialize(changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS) -> DataFrame:
+    """A batch of decoded change events → CDC state fragment (one row per
+    key: latest event's after-image, or a tombstone for deletes). One
+    aggregate, one shuffle on the key."""
+    return _latest(_state_rows(changes, after_cols))
 
 
 def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -150,24 +178,24 @@ def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
     highest offset wins. Commutative + associative + idempotent (offsets
     are unique per key), so micro-batches can arrive out of order, be
     retried, or be re-split arbitrarily — the fixpoint is the same.
-    One shuffle on the key; at Debezium-keyed-topic scale the input is
-    already partitioned by key, so AQE keeps this cheap. Same max_by
-    aggregate shape as `materialize` (map-side combinable)."""
-    u = a.unionByName(b)
-    payload = [c for c in u.columns if c != "id"]
-    last = u.groupBy("id").agg(
-        F.expr(f"max_by(struct({', '.join(payload)}), _offset)").alias("_last")
-    )
-    return last.select("id", *[F.col(f"_last.{c}").alias(c) for c in payload])
+    One aggregate over the union, one shuffle on the key; at
+    Debezium-keyed-topic scale the input is already partitioned by key,
+    so AQE keeps this cheap."""
+    return _latest(a.unionByName(b))
 
 
 def apply_changes(
     state: DataFrame, changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS
 ) -> DataFrame:
     """MERGE a batch of decoded change events into a CDC state snapshot.
-    With Delta/Iceberg on the cluster this maps to ``MERGE INTO`` keyed on
-    (id) with an offset guard (`WHEN MATCHED AND src._offset > tgt._offset`)."""
-    return merge_states(state, materialize(changes, after_cols))
+
+    Equal to ``merge_states(state, materialize(changes))``, but because the
+    per-key max over offsets is associative the batch is not reduced on its
+    own first: its events join the state as state rows and ONE aggregate
+    reduces the union — one shuffle on the key per merge, not two. With a
+    lakehouse table this maps to ``MERGE INTO`` keyed on (id) with an
+    offset guard (`WHEN MATCHED AND src._offset > tgt._offset`)."""
+    return _latest(state.unionByName(_state_rows(changes, after_cols)))
 
 
 def state_view(state: DataFrame) -> DataFrame:
@@ -175,10 +203,12 @@ def state_view(state: DataFrame) -> DataFrame:
     return state.filter(~F.col("_deleted")).drop("_offset", "_deleted")
 
 
-def empty_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "id long, value double, ts string, _offset long, _deleted boolean"
-    )
+def empty_state(spark: SparkSession, schema: T.StructType = STATE_SCHEMA) -> DataFrame:
+    """The state of a target nothing was merged into yet. Built over an
+    empty JVM RDD: no partitions, so no task and no Python worker runs for
+    it (``createDataFrame([], schema)`` parallelizes an empty local list
+    and schedules a Python-worker task per core)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def final_state_upsert(changes: DataFrame) -> DataFrame:

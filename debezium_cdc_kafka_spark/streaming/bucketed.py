@@ -45,8 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.cdc import materialize, merge_states, state_view
-from .cdc_stream import STATE_SCHEMA
+from ..operators.cdc import (
+    STATE_SCHEMA,
+    _state_rows,
+    apply_changes,
+    empty_state,
+    state_view,
+)
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 # range-mode bucket_expr floors negative keys to NEGATIVE bucket ids and
@@ -172,7 +177,7 @@ class BucketedSnapshotTarget:
     ) -> DataFrame:
         paths = self._latest_bucket_paths(before_version, buckets)
         if not paths:
-            return spark.createDataFrame([], self.schema)
+            return empty_state(spark, self.schema)
         return spark.read.schema(self.schema).parquet(*paths)
 
     def read_view(self, spark: SparkSession) -> DataFrame:
@@ -185,12 +190,11 @@ class BucketedSnapshotTarget:
         after_cols: tuple[str, ...] = ("value", "ts"),
     ) -> None:
         spark = changes.sparkSession
-        batch = materialize(changes, after_cols)
         # buckets this epoch touches: bounded by min(|batch keys|, buckets
         # with data) — a driver-side list of ints, never row data
         touched = {
             r[0]
-            for r in batch.select(self.bucket_expr().alias("b"))
+            for r in _state_rows(changes, after_cols).select(self.bucket_expr().alias("b"))
             .distinct()
             .collect()
         }
@@ -202,7 +206,7 @@ class BucketedSnapshotTarget:
             open(os.path.join(vd, "_SUCCESS"), "w").close()
             return
         current = self.read(spark, before_version=epoch_id, buckets=touched)
-        merged = merge_states(current, batch)
+        merged = apply_changes(current, changes, after_cols)
         vd = os.path.join(self.path, f"v={epoch_id}")
         # a retried epoch overwrites its own version atomically-enough for
         # the read side: readers require _SUCCESS, written last

@@ -16,6 +16,13 @@ Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
   because plain Parquet has no MERGE. Each epoch commits a new version
   directory; a retried epoch overwrites its own version and reads the
   last version *before* it, making the merge deterministic under retries.
+- An epoch's fixed cost is kept to the merge itself. Stored versions are
+  read with the target's pinned schema (no Parquet footer-inference job),
+  an empty target reads as a JVM-side empty state (no Python-worker
+  tasks), and the merge is one aggregate, so one shuffle on the key.
+- The dead-letter sink (`dead_letter_path`) is versioned the same way:
+  each epoch overwrites its own ``epoch=<id>`` directory, so a replayed
+  epoch quarantines its malformed rows once, not twice.
 """
 
 from __future__ import annotations
@@ -27,18 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.cdc import apply_changes, decode_envelope, state_view
-
-# Stored snapshot = CDC state incl. merge bookkeeping (see operators.cdc:
-# tombstones retained so out-of-order/retried batches merge correctly).
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("_offset", T.LongType()),
-        T.StructField("_deleted", T.BooleanType()),
-    ]
+from ..operators.cdc import (
+    STATE_SCHEMA,
+    apply_changes,
+    decode_envelope,
+    empty_state,
+    state_view,
 )
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
@@ -73,8 +74,8 @@ class ParquetSnapshotTarget:
         user-facing table."""
         vs = [v for v in self.versions() if before_version is None or v < before_version]
         if not vs:
-            return spark.createDataFrame([], self.schema)
-        return spark.read.parquet(os.path.join(self.path, f"v={vs[-1]}"))
+            return empty_state(spark, self.schema)
+        return spark.read.schema(self.schema).parquet(os.path.join(self.path, f"v={vs[-1]}"))
 
     def read_view(self, spark: SparkSession) -> DataFrame:
         return state_view(self.read(spark))
@@ -138,12 +139,13 @@ def run_cdc_stream(
         if dead_letter_path is not None:
             # quarantine malformed envelopes with provenance (epoch +
             # offset) instead of silently dropping them — the reference
-            # only logs these (consumer.py:78–79)
+            # only logs these (consumer.py:78–79). One directory per epoch,
+            # overwritten on replay, so a retried epoch is not counted twice.
             (
                 batch_df.filter(F.col("is_malformed"))
-                .select("id", "offset", F.lit(epoch_id).alias("epoch"))
-                .write.mode("append")
-                .parquet(dead_letter_path)
+                .select("id", "offset")
+                .write.mode("overwrite")
+                .parquet(os.path.join(dead_letter_path, f"epoch={epoch_id}"))
             )
         target.merge_epoch(batch_df, epoch_id, after_cols)
 

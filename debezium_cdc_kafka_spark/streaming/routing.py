@@ -28,8 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.cdc import decode_envelope
-from .cdc_stream import STATE_SCHEMA, ParquetSnapshotTarget
+from ..operators.cdc import STATE_SCHEMA, decode_envelope
+from .cdc_stream import ParquetSnapshotTarget
 
 
 def table_name(topic: Column) -> Column:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.catalog import load_table
@@ -64,14 +66,19 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
     env_dir = str(tmp_path / "env")
     derive_change_events(spark, SF_SMOKE).repartition(3).write.parquet(env_dir)
     dl_dir = str(tmp_path / "dead_letter")
-    q = run_cdc_stream(
-        spark,
-        file_change_stream(spark, env_dir),
-        str(tmp_path / "target"),
-        str(tmp_path / "ckpt"),
-        dead_letter_path=dl_dir,
-    )
-    q.awaitTermination(120)
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = run_cdc_stream(
+            spark,
+            file_change_stream(spark, env_dir),
+            str(tmp_path / "target"),
+            ckpt,
+            dead_letter_path=dl_dir,
+        )
+        q.awaitTermination(120)
+
+    drain()
     dead = spark.read.parquet(dl_dir)
     n_expected = (
         load_table(spark, SF_SMOKE, "events")
@@ -80,3 +87,13 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
     )
     assert dead.count() == n_expected
     assert set(dead.columns) == {"id", "offset", "epoch"}
+
+    # crash between apply and checkpoint commit: the last epoch replays on
+    # restart and must not quarantine its rows a second time
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    drain()
+    assert spark.read.parquet(dl_dir).count() == n_expected
