@@ -34,14 +34,13 @@ see streaming/cdc_stream.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..registry import registrar
 from ..sources.cdc_events import (
     ENVELOPE_SCHEMA,
     MALFORMED_MOD,
@@ -50,18 +49,7 @@ from ..sources.cdc_events import (
     derive_change_events,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 KNOWN_OPS = ("c", "r", "u", "d")

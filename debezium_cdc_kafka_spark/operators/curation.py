@@ -13,8 +13,6 @@ applies the same way). The eval side of the contamination join is tiny
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -22,20 +20,10 @@ from pyspark.sql.window import Window as W
 from ..catalog import load_table
 from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.textfns import tokens, tokens_sql
+from ..registry import registrar
 from .dedup import _SHINGLES_CTE, CLUSTERS_ORACLE, dedup_clusters, doc_shingles
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 STRATIFIED_ORACLE = """

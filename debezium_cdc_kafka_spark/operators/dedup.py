@@ -24,7 +24,6 @@ by construction (hashes), so no skew.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,19 +39,9 @@ from ..functions.hashing import (
     minhash_perm_sql,
 )
 from ..functions.textfns import shingles, shingles_sql, tokens, tokens_sql
+from ..registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 def _spread(docs: DataFrame) -> DataFrame:

@@ -22,12 +22,11 @@ size.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import registrar
 
 from .dedup import (
     _SHINGLES_CTE,
@@ -41,18 +40,7 @@ from .dedup import (
     doc_shingle_arrays,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # Registered here (a past-the-window module) rather than in similarity.py

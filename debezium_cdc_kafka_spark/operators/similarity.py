@@ -24,8 +24,6 @@ is a window over (query, cell) partitions — bounded by k, no global sort.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..functions.hashing import md5_long, md5_long_sql
+from ..registry import registrar
 from .dedup import (
     _BAND_W_SQL,
     _VERIFY_BROADCAST_MAX,
@@ -43,18 +42,7 @@ from .dedup import (
     sq_norm_expr,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # Query set: every 100th vector (deterministic, SF-independent rule).
@@ -2073,8 +2061,7 @@ def q_rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_rrf_hybrid_search"] = q_rrf_hybrid_search
-ORACLES["q_rrf_hybrid_search"] = _rrf_oracle()
+query("q_rrf_hybrid_search", _rrf_oracle())(q_rrf_hybrid_search)
 
 
 # ---------------------------------------------------------------------------
@@ -2496,8 +2483,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-QUERIES["q_kcenter_coreset"] = q_kcenter_coreset
-ORACLES["q_kcenter_coreset"] = _kcenter_oracle()
+query("q_kcenter_coreset", _kcenter_oracle())(q_kcenter_coreset)
 
 
 # ---------------------------------------------------------------------------
@@ -2930,8 +2916,7 @@ def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-QUERIES["q_dbscan_clusters"] = q_dbscan_clusters
-ORACLES["q_dbscan_clusters"] = DBSCAN_ORACLE
+query("q_dbscan_clusters", DBSCAN_ORACLE)(q_dbscan_clusters)
 
 
 # ---------------------------------------------------------------------------
@@ -3075,8 +3060,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_label_propagation"] = q_label_propagation
-ORACLES["q_label_propagation"] = LABELPROP_ORACLE
+query("q_label_propagation", LABELPROP_ORACLE)(q_label_propagation)
 
 
 # ---------------------------------------------------------------------------

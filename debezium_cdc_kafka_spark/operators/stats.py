@@ -12,8 +12,6 @@ Two coverage pieces:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,19 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 MOMENTS_ORACLE = """

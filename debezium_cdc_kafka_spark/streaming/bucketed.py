@@ -52,8 +52,8 @@ from ..operators.cdc import (
     empty_state,
     state_view,
 )
+from .cdc_stream import committed_versions
 
-_VERSION_RE = re.compile(r"^v=(\d+)$")
 # range-mode bucket_expr floors negative keys to NEGATIVE bucket ids and
 # Spark's partitionBy writes them as `b=-3/` — the listing regex must
 # accept the sign or those buckets become invisible to read()/compact()
@@ -135,12 +135,7 @@ class BucketedSnapshotTarget:
     # -- version/bucket listing ---------------------------------------------
 
     def versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.path):
-            m = _VERSION_RE.match(name)
-            if m and os.path.exists(os.path.join(self.path, name, "_SUCCESS")):
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return committed_versions(self.path)
 
     def _buckets_in(self, version: int) -> list[int]:
         vd = os.path.join(self.path, f"v={version}")

@@ -22,7 +22,8 @@ Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
   tasks), and the merge is one aggregate, so one shuffle on the key.
 - The dead-letter sink (`dead_letter_path`) is versioned the same way:
   each epoch overwrites its own ``epoch=<id>`` directory, so a replayed
-  epoch quarantines its malformed rows once, not twice.
+  epoch quarantines its malformed rows once, not twice. routing.py's
+  unroutable-topic sink shares that writer (`_quarantine`).
 """
 
 from __future__ import annotations
@@ -45,6 +46,17 @@ from ..operators.cdc import (
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
 
+def committed_versions(path: str) -> list[int]:
+    """Sorted epochs with a committed ``<path>/v=<epoch>/_SUCCESS``: the
+    version listing of every versioned snapshot target."""
+    out = []
+    for name in os.listdir(path):
+        m = _VERSION_RE.match(name)
+        if m and os.path.exists(os.path.join(path, name, "_SUCCESS")):
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
 class ParquetSnapshotTarget:
     """Mutable keyed table over immutable Parquet: version-per-epoch commits.
 
@@ -62,12 +74,7 @@ class ParquetSnapshotTarget:
         os.makedirs(path, exist_ok=True)
 
     def versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.path):
-            m = _VERSION_RE.match(name)
-            if m and os.path.exists(os.path.join(self.path, name, "_SUCCESS")):
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return committed_versions(self.path)
 
     def read(self, spark: SparkSession, before_version: int | None = None) -> DataFrame:
         """Full stored state (incl. tombstones); use `read_view` for the
@@ -139,19 +146,29 @@ def run_cdc_stream(
         if dead_letter_path is not None:
             # quarantine malformed envelopes with provenance (epoch +
             # offset) instead of silently dropping them — the reference
-            # only logs these (consumer.py:78–79). One directory per epoch,
-            # overwritten on replay, so a retried epoch is not counted twice.
-            (
-                batch_df.filter(F.col("is_malformed"))
-                .select("id", "offset")
-                .write.mode("overwrite")
-                .parquet(os.path.join(dead_letter_path, f"epoch={epoch_id}"))
+            # only logs these (consumer.py:78–79).
+            _quarantine(
+                batch_df.filter(F.col("is_malformed")).select("id", "offset"),
+                dead_letter_path,
+                epoch_id,
             )
         target.merge_epoch(batch_df, epoch_id, after_cols)
 
-    writer = decoded.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_path
-    )
+    return _start_foreach_batch(decoded, _apply, checkpoint_path, available_now)
+
+
+def _quarantine(rows: DataFrame, path: str, epoch_id: int) -> None:
+    """Write an epoch's quarantined rows to ``<path>/epoch=<id>``. Each
+    epoch overwrites its own directory, so a replayed epoch is not counted
+    twice; ``epoch`` reads back as a column through partition discovery."""
+    rows.write.mode("overwrite").parquet(os.path.join(path, f"epoch={epoch_id}"))
+
+
+def _start_foreach_batch(stream: DataFrame, apply, checkpoint_path: str, available_now: bool):
+    """Start ``stream`` with ``apply(batch_df, epoch_id)`` as its
+    foreachBatch body. ``available_now=True`` drains what is there and
+    stops; ``False`` runs continuously with a 1 s trigger."""
+    writer = stream.writeStream.foreachBatch(apply).option("checkpointLocation", checkpoint_path)
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:

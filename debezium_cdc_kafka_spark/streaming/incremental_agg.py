@@ -40,8 +40,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import apply_changes, decode_envelope, well_formed
-from .cdc_stream import ParquetSnapshotTarget
+from ..operators.cdc import decode_envelope, well_formed
+from .cdc_stream import ParquetSnapshotTarget, _start_foreach_batch
 
 _AGG_VERSION_RE = re.compile(r"^agg-v=(\d+)\.json$")
 
@@ -107,23 +107,14 @@ def maintain_incremental_agg(
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        old = target.read(s, before_version=epoch_id)
-        merged = apply_changes(old, batch_df)
-        # Merged is read twice (commit + delta agg) and old twice — at this
-        # size a local checkpointless reuse is fine; on a cluster the MERGE
-        # output is the committed table, read back for the delta for free.
+        # The old and new states are the target's versions either side of
+        # this epoch's merge; the new one is read back from the committed
+        # version, as a cluster reads the MERGE output for the delta.
         keys = well_formed(batch_df).select("id").distinct()
-        n_old, c_old = _agg_restricted(old, keys)
-        target.commit(merged, epoch_id)
+        n_old, c_old = _agg_restricted(target.read(s, before_version=epoch_id), keys)
+        target.merge_epoch(batch_df, epoch_id)
         n_new, c_new = _agg_restricted(target.read(s, before_version=epoch_id + 1), keys)
         n_prev, c_prev = aggs.read(before_version=epoch_id)
         aggs.commit(epoch_id, n_prev + (n_new - n_old), c_prev + (c_new - c_old))
 
-    writer = decoded.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start(), aggs
+    return _start_foreach_batch(decoded, _apply, checkpoint_path, available_now), aggs

@@ -16,8 +16,9 @@ decode→reduce→merge plan, all narrow until the per-table key shuffle. The
 routing column derives from `topic` (already in every Kafka record), so
 fan-out adds no extra scan of the stream. Unroutable topics (a table added
 to the capture list before a route is configured) are quarantined with
-provenance rather than dropped — same policy as the malformed dead-letter
-sink (consumer.py:78–79 only logs; we keep the data).
+provenance rather than dropped — same policy and same per-epoch
+``epoch=<id>`` layout as the malformed dead-letter sink (consumer.py:78–79
+only logs; we keep the data), so a replayed epoch quarantines them once.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.cdc import STATE_SCHEMA, decode_envelope
-from .cdc_stream import ParquetSnapshotTarget
+from .cdc_stream import ParquetSnapshotTarget, _quarantine, _start_foreach_batch
 
 
 def table_name(topic: Column) -> Column:
@@ -62,12 +63,10 @@ def route_batch(
     """Apply one micro-batch of raw Kafka records to every routed table."""
     tagged = batch_df.withColumn("_table", table_name(F.col("topic")))
     if unknown_table_path is not None:
-        (
-            tagged.filter(~F.col("_table").isin(*routes))
-            .withColumn("epoch", F.lit(epoch_id))
-            .drop("_table")
-            .write.mode("append")
-            .parquet(unknown_table_path)
+        _quarantine(
+            tagged.filter(~F.col("_table").isin(*routes)).drop("_table"),
+            unknown_table_path,
+            epoch_id,
         )
     for tbl, route in routes.items():
         sub = tagged.filter(F.col("_table") == tbl).drop("_table")
@@ -95,11 +94,4 @@ def run_routed_stream(
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         route_batch(batch_df, epoch_id, routes, unknown_table_path)
 
-    writer = raw_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return _start_foreach_batch(raw_stream, _apply, checkpoint_path, available_now)

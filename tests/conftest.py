@@ -21,6 +21,16 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def drop_last_commit(checkpoint: str) -> None:
+    """Simulate a crash between a micro-batch's apply and its checkpoint
+    commit: delete the newest ``commits/<n>`` so a restart replays epoch n."""
+    commits = os.path.join(checkpoint, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus="8")

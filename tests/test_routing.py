@@ -21,6 +21,7 @@ from debezium_cdc_kafka_spark.streaming.routing import (
     run_routed_stream,
     table_name,
 )
+from tests.conftest import drop_last_commit
 
 RAW_SCHEMA = "key string, value string, topic string, partition int, offset long, timestamp timestamp"
 
@@ -94,6 +95,44 @@ def test_multi_table_routing(spark, tmp_path):
     assert [r.topic for r in unrouted.collect()] == [unknown]
     # quarantined rows keep full provenance for later replay
     assert {"key", "value", "topic", "offset", "epoch"} <= set(unrouted.columns)
+
+
+def test_unrouted_quarantine_replay_idempotent(spark, tmp_path):
+    """A crash between apply and checkpoint commit replays the last epoch;
+    its unroutable records must be quarantined once, not twice. Every
+    epoch carries one unroutable record, so the replayed one does too."""
+    cust = "dbserver1.inventory.customers"
+    unknown = "dbserver1.inventory.products"
+    env_dir = str(tmp_path / "envelopes")
+    for i in range(3):
+        rows = [
+            rec(i, env("c", None, after(i, 10.0 * i)), cust, 2 * i),
+            rec(i, env("c", None, after(i, 1.0)), unknown, 2 * i + 1),
+        ]
+        spark.createDataFrame(rows, RAW_SCHEMA).coalesce(1).write.mode("append").parquet(env_dir)
+
+    routes = {"customers": TableRoute(str(tmp_path / "t_customers"))}
+    quarantine = str(tmp_path / "unrouted")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = run_routed_stream(
+            spark,
+            file_change_stream(spark, env_dir),
+            routes,
+            ckpt,
+            unknown_table_path=quarantine,
+        )
+        q.awaitTermination(120)
+
+    drain()
+    assert spark.read.parquet(quarantine).count() == 3
+
+    drop_last_commit(ckpt)
+    drain()
+    assert spark.read.parquet(quarantine).count() == 3
+    got = {r.id: r.value for r in routes["customers"].target().read_view(spark).collect()}
+    assert got == {0: 0.0, 1: 10.0, 2: 20.0}
 
 
 def test_schema_evolution_widened_after(spark, tmp_path):

@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.catalog import load_table
 from debezium_cdc_kafka_spark.streaming.stateful import running_user_stats
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, drop_last_commit
 
 
 def test_running_user_stats_accumulates_across_batches(spark, tmp_path):
@@ -90,10 +88,6 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
 
     # crash between apply and checkpoint commit: the last epoch replays on
     # restart and must not quarantine its rows a second time
-    commits = os.path.join(ckpt, "commits")
-    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    for f in (str(last), f".{last}.crc"):
-        if os.path.exists(os.path.join(commits, f)):
-            os.remove(os.path.join(commits, f))
+    drop_last_commit(ckpt)
     drain()
     assert spark.read.parquet(dl_dir).count() == n_expected
