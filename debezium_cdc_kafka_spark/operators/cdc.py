@@ -42,11 +42,12 @@ from pyspark.sql.window import Window as W
 from ..catalog import load_table
 from ..registry import registrar
 from ..sources.cdc_events import (
-    ENVELOPE_SCHEMA,
+    BOOKKEEPING,
     MALFORMED_MOD,
     MALFORMED_REM,
-    TS_FMT,
+    STATE_SCHEMA,
     derive_change_events,
+    envelope_schema,
 )
 
 QUERIES, ORACLES, query = registrar()
@@ -55,7 +56,7 @@ QUERIES, ORACLES, query = registrar()
 KNOWN_OPS = ("c", "r", "u", "d")
 
 
-def decode_envelope(raw: DataFrame, strict_ops: bool = True, schema=None) -> DataFrame:
+def decode_envelope(raw: DataFrame, schema: T.StructType = STATE_SCHEMA) -> DataFrame:
     """Kafka records → typed change rows.
 
     C1 envelope decode (bytes→JSON→payload ≙ consumer.py:65–71) via
@@ -65,18 +66,19 @@ def decode_envelope(raw: DataFrame, strict_ops: bool = True, schema=None) -> Dat
     dead-letter sink or count it. C9 strictness: unknown op codes raise,
     like the reference's ``RuntimeError`` (postgres.py:260–261).
 
-    `schema` defaults to the events-derived domain; pass a different
-    envelope StructType for other replicated tables (e.g. the workload
-    generator's customers domain) — everything downstream is shape-generic.
+    `schema` is the replicated table's state schema (the events-derived
+    table by default, e.g. `workload.CUSTOMERS_STATE_SCHEMA` for the
+    customers table); the envelope is derived from it
+    (`cdc_events.envelope_schema`), and everything downstream takes its
+    columns from the decoded ``after`` struct.
     """
     parsed = raw.filter(F.col("value").isNotNull()).withColumn(
-        "envelope", F.from_json(F.col("value"), schema or ENVELOPE_SCHEMA)
+        "envelope", F.from_json(F.col("value"), envelope_schema(schema))
     )
     op = F.col("envelope.payload.op")
-    if strict_ops:
-        op = F.when(
-            op.isNull() | op.isin(*KNOWN_OPS), op
-        ).otherwise(F.raise_error(F.concat(F.lit("Unknown option: "), op)))
+    op = F.when(op.isNull() | op.isin(*KNOWN_OPS), op).otherwise(
+        F.raise_error(F.concat(F.lit("Unknown option: "), op))
+    )
     return parsed.select(
         F.col("envelope.payload.before").alias("before"),
         F.col("envelope.payload.after").alias("after"),
@@ -106,34 +108,23 @@ def last_event_per_key(changes: DataFrame, key: str = "id", order: str = "offset
     )
 
 
-# Materialized CDC state: the after-image plus merge bookkeeping. Delete
-# events are RETAINED as tombstone rows (_deleted=true) so that a stale
-# re-delivered event with a lower offset can never resurrect a deleted key —
-# this makes the state merge commutative and idempotent across batches, not
-# just replay-safe when batches arrive in order. This is the events-derived
-# domain's state; other domains swap the after-image columns (e.g.
-# pipeline.CUSTOMERS_STATE_SCHEMA) and keep id/_offset/_deleted.
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("_offset", T.LongType()),
-        T.StructField("_deleted", T.BooleanType()),
-    ]
-)
+# Materialized CDC state (`cdc_events.STATE_SCHEMA` and its siblings): the
+# after-image plus _offset/_deleted merge bookkeeping, with deletes kept as
+# tombstone rows. The after-image columns are read off the decoded frame.
 
 
-AFTER_COLS = ("value", "ts")  # events-derived domain's after-image columns
+def after_columns(changes: DataFrame) -> tuple[str, ...]:
+    """The after-image columns a decoded frame carries, key excluded."""
+    return tuple(n for n in changes.schema["after"].dataType.names if n != "id")
 
 
-def _state_rows(changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS) -> DataFrame:
+def _state_rows(changes: DataFrame) -> DataFrame:
     """Each well-formed change event as a state row: (id, after-image
     columns, offset → _offset, op = 'd' → _deleted). A narrow projection:
     no shuffle, and a delete's null after-image becomes a tombstone."""
     return well_formed(changes).select(
         "id",
-        *[F.col(f"after.{c}").alias(c) for c in after_cols],
+        *[F.col(f"after.{c}").alias(c) for c in after_columns(changes)],
         F.col("offset").alias("_offset"),
         (F.col("op") == "d").alias("_deleted"),
     )
@@ -154,11 +145,11 @@ def _latest(rows: DataFrame) -> DataFrame:
     return last.select("id", *[F.col(f"_last.{c}").alias(c) for c in payload])
 
 
-def materialize(changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS) -> DataFrame:
+def materialize(changes: DataFrame) -> DataFrame:
     """A batch of decoded change events → CDC state fragment (one row per
     key: latest event's after-image, or a tombstone for deletes). One
     aggregate, one shuffle on the key."""
-    return _latest(_state_rows(changes, after_cols))
+    return _latest(_state_rows(changes))
 
 
 def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -172,9 +163,7 @@ def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
     return _latest(a.unionByName(b))
 
 
-def apply_changes(
-    state: DataFrame, changes: DataFrame, after_cols: tuple[str, ...] = AFTER_COLS
-) -> DataFrame:
+def apply_changes(state: DataFrame, changes: DataFrame) -> DataFrame:
     """MERGE a batch of decoded change events into a CDC state snapshot.
 
     Equal to ``merge_states(state, materialize(changes))``, but because the
@@ -183,12 +172,12 @@ def apply_changes(
     reduces the union — one shuffle on the key per merge, not two. With a
     lakehouse table this maps to ``MERGE INTO`` keyed on (id) with an
     offset guard (`WHEN MATCHED AND src._offset > tgt._offset`)."""
-    return _latest(state.unionByName(_state_rows(changes, after_cols)))
+    return _latest(state.unionByName(_state_rows(changes)))
 
 
 def state_view(state: DataFrame) -> DataFrame:
     """User-facing table: tombstones filtered out, bookkeeping dropped."""
-    return state.filter(~F.col("_deleted")).drop("_offset", "_deleted")
+    return state.filter(~F.col("_deleted")).drop(*BOOKKEEPING)
 
 
 def empty_state(spark: SparkSession, schema: T.StructType = STATE_SCHEMA) -> DataFrame:

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -730,18 +730,21 @@ def dedup_embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame
 _VERIFY_BROADCAST_MAX = 2_000_000
 
 
-def _cosine_verify(spark: SparkSession, cand: DataFrame, emb: DataFrame) -> DataFrame:
-    """τ = 0.4 cosine verify of a (v1, v2) candidate frame — WITHOUT ever
-    sorting pair rows that carry embedding arrays (r8, found by the ×256
-    sweep): the naive cand⋈emb⋈emb plan sort-merge-joins the SECOND hop
-    on v2, which sorts |candidates| rows each dragging a 64-float array
-    (~58 GB of sort input at ×256 — the spill filled local disk and
-    killed the JVM in the banded companion's verify). Broadcast-hash
-    joins keep the pair frame streaming: candidates flow from the
-    distinct straight through both probes and the τ filter in one stage,
-    and only the (v1, v2, cosine) survivors ever hit a shuffle again.
-    Past _VERIFY_BROADCAST_MAX vectors, shuffle-hash joins (explicit
-    hint — never sort-merge) with the pair_fanout pin take over."""
+def cosine_pairs(
+    spark: SparkSession, cand: DataFrame, emb: DataFrame, n_vec: int
+) -> tuple[DataFrame, Column]:
+    """(v1, v2) candidate pairs joined to both vectors, plus their cosine
+    — WITHOUT ever sorting pair rows that carry embedding arrays (r8,
+    found by the ×256 sweep): the naive cand⋈emb⋈emb plan sort-merge-joins
+    the SECOND hop on v2, which sorts |candidates| rows each dragging a
+    64-float array (~58 GB of sort input at ×256 — the spill filled local
+    disk and killed the JVM in the banded companion's verify).
+    Broadcast-hash joins keep the pair frame streaming: candidates flow
+    straight through both probes and the caller's τ filter in one stage,
+    and only the survivors ever hit a shuffle again. Past
+    _VERIFY_BROADCAST_MAX vectors (``n_vec``), shuffle-hash joins
+    (explicit hint — never sort-merge) with the pair_fanout pin take
+    over. Callers apply their own τ filter and projection."""
     a = emb.select(
         F.col("vec_id").alias("v1"),
         F.col("embedding").alias("e1"),
@@ -752,7 +755,7 @@ def _cosine_verify(spark: SparkSession, cand: DataFrame, emb: DataFrame) -> Data
         F.col("embedding").alias("e2"),
         sq_norm_expr("embedding").alias("n2"),
     )
-    if emb.count() <= _VERIFY_BROADCAST_MAX:
+    if n_vec <= _VERIFY_BROADCAST_MAX:
         pairs = cand.join(F.broadcast(a), "v1").join(F.broadcast(b), "v2")
     else:
         fan = pair_fanout(spark)
@@ -762,7 +765,12 @@ def _cosine_verify(spark: SparkSession, cand: DataFrame, emb: DataFrame) -> Data
             .repartition(fan, "v2")
             .join(b.hint("shuffle_hash"), "v2")
         )
-    cos = dot_expr("e1", "e2") / F.sqrt(F.col("n1") * F.col("n2"))
+    return pairs, dot_expr("e1", "e2") / F.sqrt(F.col("n1") * F.col("n2"))
+
+
+def _cosine_verify(spark: SparkSession, cand: DataFrame, emb: DataFrame) -> DataFrame:
+    """τ = 0.4 cosine verify of a (v1, v2) candidate frame."""
+    pairs, cos = cosine_pairs(spark, cand, emb, emb.count())
     return pairs.filter(cos >= 0.4).select("v1", "v2", F.round(cos, 3).alias("cosine"))
 
 

@@ -34,9 +34,9 @@ from ..functions.hashing import md5_long, md5_long_sql
 from ..registry import registrar
 from .dedup import (
     _BAND_W_SQL,
-    _VERIFY_BROADCAST_MAX,
     EMB_DOT_SQL,
     EMB_NORM_SQL,
+    cosine_pairs,
     dot_expr,
     pair_fanout,
     sq_norm_expr,
@@ -175,9 +175,6 @@ def _nearest_seed(emb: DataFrame, payload: tuple[str, ...] = ()) -> DataFrame:
         F.col("b.d2").alias("d2"),
         *[F.col(f"b.{c}").alias(c) for c in payload],
     )
-
-
-_pair_fanout = pair_fanout
 
 
 _COS_SQL = (
@@ -862,10 +859,10 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # squared norm once per vector, not per pair: cos = dot / sqrt(n1*n2)
     # is bit-identical to the inline per-pair form (same fold values),
     # but the in-cell pair scan drops from three 64-element folds to one.
-    # _pair_fanout pins the pair join's exchanges (join key, explicit N):
+    # pair_fanout pins the pair join's exchanges (join key, explicit N):
     # AQE's byte-based coalescing otherwise fuses the whole n^2/k pair
     # scan into one task (see q_knn_graph).
-    fan = _pair_fanout(spark)
+    fan = pair_fanout(spark)
     # r9: BOTH pair sides read one repartition of an IDENTICAL frame and
     # rename columns only ABOVE the exchange — the two exchange subtrees
     # are then bit-identical, so ReuseExchange materializes the
@@ -2148,9 +2145,9 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The checkpoint scan reports no partitioning, so the pair join's
     # exchanges are ENSURE_REQUIREMENTS and AQE coalesced them to ONE
     # task by bytes (the 64-float rows are small; the n^2/k pair work is
-    # not). _pair_fanout pins the join-key exchange instead — measured
+    # not). pair_fanout pins the join-key exchange instead — measured
     # 4.3 s -> 1.5 s for this stage at sf0.1, values bit-identical.
-    fan = _pair_fanout(spark)
+    fan = pair_fanout(spark)
     # r9: one repartition, renamed ABOVE the exchange on each side, so the
     # two exchange subtrees are identical and ReuseExchange shuffles the
     # cell frame once (see semdedup_survivors).
@@ -2768,40 +2765,14 @@ def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays ~n*cap per label per band instead of n^2/|labels|.
     bands, bits_real = _db_banding(spark, emb)
     cand = _db_candidates(spark, emb, bands, bits_real)
-    va = emb.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("e1"),
-        sq_norm_expr("embedding").alias("n1"),
-    )
-    vb = emb.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("e2"),
-        sq_norm_expr("embedding").alias("n2"),
-    )
-    # BROADCAST the vector table into both verify hops (r8 — the same
-    # wide-sort defect dedup._cosine_verify fixed this round): the
-    # sort-merge form sorts |candidates| rows dragging 64-float arrays,
-    # and at x256 (~820M in-bucket candidates) the sort spill exhausted
-    # local disk twice (artifacts_r8/x256_dbscan_fail_evidence.txt).
-    # Broadcast keeps the candidate frame streaming: bucket join -> two
-    # hash probes -> eps filter in one stage, and only the eps-edge
-    # survivors ever shuffle again. Past _VERIFY_BROADCAST_MAX vectors
-    # the fallback is dedup._cosine_verify's else-branch verbatim —
-    # candidate-fanout repartition + explicit shuffle_hash hints, never
-    # a sort-merge join whose sort drags the 64-float arrays (the very
-    # disk-exhaustion shape this comment's first paragraph documents).
-    cos = dot_expr("e1", "e2") / F.sqrt(F.col("n1") * F.col("n2"))
+    # The verify joins are dedup.cosine_pairs: broadcast hash probes (or,
+    # past _VERIFY_BROADCAST_MAX vectors, shuffle-hash joins), never a
+    # sort-merge join whose sort drags the 64-float arrays — at x256
+    # (~820M in-bucket candidates) that sort spill exhausted local disk
+    # twice (artifacts_r8/x256_dbscan_fail_evidence.txt). Only the
+    # eps-edge survivors ever shuffle again.
     n_vec = emb.count()
-    if n_vec <= _VERIFY_BROADCAST_MAX:
-        pairs = cand.join(F.broadcast(va), "v1").join(F.broadcast(vb), "v2")
-    else:
-        fan = pair_fanout(spark)
-        pairs = (
-            cand.repartition(fan, "v1")
-            .join(va.hint("shuffle_hash"), "v1")
-            .repartition(fan, "v2")
-            .join(vb.hint("shuffle_hash"), "v2")
-        )
+    pairs, cos = cosine_pairs(spark, cand, emb, n_vec)
     pairs = pairs.filter(cos >= _DB_TAU).select("v1", "v2")
 
     def _stage(df: DataFrame, name: str) -> DataFrame:

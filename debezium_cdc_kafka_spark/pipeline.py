@@ -17,7 +17,10 @@ directory (the "topic") and a snapshot target (the "replica"):
 tests and demos run without a broker; swap `file_change_stream` for
 `sources.kafka.kafka_change_stream` and the generator for
 `workload_rate_stream` to run against a real Kafka topic — nothing else
-changes.
+changes: both generators publish customers rows through the one encoder
+(`sources.cdc_events.envelope_json`), and the consumer decodes them under
+the envelope derived from the one declaration of the table,
+`sources.workload.CUSTOMERS_STATE_SCHEMA`.
 """
 
 from __future__ import annotations
@@ -25,55 +28,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from .operators.cdc import decode_envelope, materialize, state_view
-from .sources.workload import workload_change_events
+from .sources.workload import CUSTOMERS_STATE_SCHEMA, workload_change_events
 from .sql_surface import init_target_table
 from .streaming.cdc_stream import ParquetSnapshotTarget, file_change_stream, run_cdc_stream
-
-# Debezium envelope for the customers domain (the reference's replica
-# table, postgres.py:100–107).
-CUSTOMERS_ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "payload",
-            T.StructType(
-                [
-                    T.StructField("op", T.StringType()),
-                    T.StructField(
-                        "before", T.StructType([T.StructField("id", T.LongType())])
-                    ),
-                    T.StructField(
-                        "after",
-                        T.StructType(
-                            [
-                                T.StructField("id", T.LongType()),
-                                T.StructField("first_name", T.StringType()),
-                                T.StructField("last_name", T.StringType()),
-                                T.StructField("email", T.StringType()),
-                            ]
-                        ),
-                    ),
-                    T.StructField("ts_ms", T.LongType()),
-                ]
-            ),
-        )
-    ]
-)
-
-CUSTOMERS_AFTER_COLS = ("first_name", "last_name", "email")
-
-CUSTOMERS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("first_name", T.StringType()),
-        T.StructField("last_name", T.StringType()),
-        T.StructField("email", T.StringType()),
-        T.StructField("_offset", T.LongType()),
-        T.StructField("_deleted", T.BooleanType()),
-    ]
-)
 
 
 def run_pipeline(
@@ -100,23 +59,17 @@ def run_pipeline(
     ).parquet(topic_dir)
 
     # consumer (≙ python -m app.consumer.consumer)
+    target = ParquetSnapshotTarget(target_dir, schema=CUSTOMERS_STATE_SCHEMA)
     query = run_cdc_stream(
-        spark,
-        file_change_stream(spark, topic_dir),
-        target_dir,
-        ckpt_dir,
-        envelope_schema=CUSTOMERS_ENVELOPE_SCHEMA,
-        after_cols=CUSTOMERS_AFTER_COLS,
-        state_schema=CUSTOMERS_STATE_SCHEMA,
+        spark, file_change_stream(spark, topic_dir), target_dir, ckpt_dir, target=target
     )
     query.awaitTermination(300)
 
-    return ParquetSnapshotTarget(target_dir, schema=CUSTOMERS_STATE_SCHEMA).read_view(spark)
+    return target.read_view(spark)
 
 
 def expected_final_state(spark: SparkSession, n_people: int = 100, n_ops: int = 2000) -> DataFrame:
     """One-shot batch replay of the same workload (the correctness oracle
     for run_pipeline)."""
     raw = workload_change_events(spark, n_people, n_ops)
-    decoded = decode_envelope(raw, schema=CUSTOMERS_ENVELOPE_SCHEMA)
-    return state_view(materialize(decoded, CUSTOMERS_AFTER_COLS))
+    return state_view(materialize(decode_envelope(raw, CUSTOMERS_STATE_SCHEMA)))

@@ -81,9 +81,11 @@ def _modules():
 # after their last correctness-gate row: ann_pq_adc (NaN/null
 # embeddings now raise in _pq_codebook), then the r9/r10 shuffle-removal
 # rewrites (TPC-H q02/q10/q16/q20, the k-means-cell graph and
-# cluster-quality family, graph_kcore and graph_triangle_count). Then the
-# previous window in its order (q_dbscan_clusters, q_math_functions and
-# the oldest r3 rows), truncated to fill the 50 slots.
+# cluster-quality family, graph_kcore and graph_triangle_count), and
+# q_dbscan_clusters / dedup_embedding_cosine_banded (their cosine verify
+# joins now share dedup.cosine_pairs). Then the previous window in its
+# order (q_math_functions and the oldest r3 rows), truncated to fill the
+# 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
     "ann_pq_adc",
@@ -98,8 +100,9 @@ GATE_ORDER: list[str] = [
     "q_cluster_quality_profile",
     "graph_kcore",
     "graph_triangle_count",
-    # --- previous window, oldest rows first ---
     "q_dbscan_clusters",
+    "dedup_embedding_cosine_banded",
+    # --- previous window, oldest rows first ---
     "q_math_functions",
     "ann_bruteforce_topk",
     "ann_filtered_topk",
@@ -136,7 +139,6 @@ GATE_ORDER: list[str] = [
     "semdedup_survivors",
     "text_bigram_logprob",
     "text_entropy",
-    "text_fingerprint",
 ]
 
 GATE_SLOTS = 50

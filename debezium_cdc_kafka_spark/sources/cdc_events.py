@@ -15,11 +15,17 @@ deterministic so a DuckDB oracle can reproduce the mapping:
   tombstone immediately follows it, mirroring Debezium.
 - malformed messages: events with event_id % 97 == 13 get a corrupt JSON
   body — the consumer must skip them (consumer.py:78–79 behavior).
+
+It also holds the envelope codec every table shares: a table is declared
+once by its state schema (`STATE_SCHEMA` here, `workload.
+CUSTOMERS_STATE_SCHEMA` for the customers table); `envelope_schema`
+derives the decode schema from it and `envelope_json` is the one
+Column-side encoder every generator publishes through.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,35 +40,76 @@ TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 MALFORMED_MOD = 97
 MALFORMED_REM = 13
 
-# Debezium envelope: only the fields the reference actually reads
-# (postgres.py:251–259) plus ts_ms, which it carries but ignores.
-ENVELOPE_SCHEMA = T.StructType(
+# The events-derived table's state: its row (id, value, ts) plus the merge
+# bookkeeping. This is the table's one declaration — the envelope schema,
+# the decoded after-image columns and the encoder's fields all derive from
+# it. Delete events are RETAINED as tombstone rows (_deleted=true) so that a
+# stale re-delivered event with a lower offset can never resurrect a deleted
+# key — this makes the state merge commutative and idempotent across
+# batches, not just replay-safe when batches arrive in order.
+STATE_SCHEMA = T.StructType(
     [
-        T.StructField(
-            "payload",
-            T.StructType(
-                [
-                    T.StructField("op", T.StringType()),
-                    T.StructField(
-                        "before",
-                        T.StructType([T.StructField("id", T.LongType())]),
-                    ),
-                    T.StructField(
-                        "after",
-                        T.StructType(
-                            [
-                                T.StructField("id", T.LongType()),
-                                T.StructField("value", T.DoubleType()),
-                                T.StructField("ts", T.StringType()),
-                            ]
-                        ),
-                    ),
-                    T.StructField("ts_ms", T.LongType()),
-                ]
-            ),
-        )
+        T.StructField("id", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("_offset", T.LongType()),
+        T.StructField("_deleted", T.BooleanType()),
     ]
 )
+
+BOOKKEEPING = ("_offset", "_deleted")
+
+
+def after_image(state_schema: T.StructType) -> T.StructType:
+    """The table's row as Debezium ships it: the state minus bookkeeping."""
+    return T.StructType([f for f in state_schema.fields if f.name not in BOOKKEEPING])
+
+
+def envelope_schema(state_schema: T.StructType = STATE_SCHEMA) -> T.StructType:
+    """The Debezium envelope of a table declared by its state schema: only
+    the fields the reference reads (postgres.py:251–259) plus ts_ms, which
+    it carries but ignores. ``before`` carries the key alone.
+
+    A widened state schema (a column appended) is the schema-evolution
+    path: `from_json` under the widened envelope reads BOTH generations —
+    old envelopes yield null for the new field (PERMISSIVE missing-field
+    semantics), so one decode plan serves the whole topic history. The
+    reference would need its hard-coded DDL and column lists edited by
+    hand (app/utils/postgres.py:100–107, 136, 174–177)."""
+    after = after_image(state_schema)
+    payload = T.StructType(
+        [
+            T.StructField("op", T.StringType()),
+            T.StructField("before", T.StructType([after["id"]])),
+            T.StructField("after", after),
+            T.StructField("ts_ms", T.LongType()),
+        ]
+    )
+    return T.StructType([T.StructField("payload", payload)])
+
+
+def envelope_json(
+    state_schema: T.StructType, op: Column, after: dict[str, Column], ts_ms: Column
+) -> Column:
+    """One Debezium JSON envelope per row — the encoder every generator
+    shares. ``after`` maps each after-image column of ``state_schema`` to
+    its value; a missing or extra column raises, so a generator cannot
+    publish rows of another table's shape. c/u carry the after-image,
+    d carries ``before = {id}``."""
+    names = after_image(state_schema).names
+    if set(after) != set(names):
+        raise ValueError(f"after-image columns {sorted(after)} != declared {names}")
+    image = F.struct(*[after[n].alias(n) for n in names])
+    return F.to_json(
+        F.struct(
+            F.struct(
+                op.alias("op"),
+                F.when(op == "d", F.struct(after["id"].alias("id"))).alias("before"),
+                F.when(op.isin("c", "u"), image).alias("after"),
+                ts_ms.alias("ts_ms"),
+            ).alias("payload")
+        )
+    )
 
 
 def op_expr():
@@ -90,24 +137,15 @@ def derive_change_events(
     """
     ev = load_table(spark, sf_dir, "events")
     op = op_expr()
-    after = F.when(
-        op.isin("c", "u"),
-        F.struct(
-            F.col(key_col).alias("id"),
-            F.col("value").alias("value"),
-            F.date_format("ts", TS_FMT).alias("ts"),
-        ),
-    )
-    before = F.when(op == "d", F.struct(F.col(key_col).alias("id")))
-    envelope = F.to_json(
-        F.struct(
-            F.struct(
-                op.alias("op"),
-                before.alias("before"),
-                after.alias("after"),
-                F.unix_millis(F.col("ts")).alias("ts_ms"),
-            ).alias("payload")
-        )
+    envelope = envelope_json(
+        STATE_SCHEMA,
+        op,
+        {
+            "id": F.col(key_col),
+            "value": F.col("value"),
+            "ts": F.date_format("ts", TS_FMT),
+        },
+        F.unix_millis(F.col("ts")),
     )
     malformed = (F.col("event_id") % MALFORMED_MOD) == MALFORMED_REM
     body = F.when(malformed, F.lit('{"payload": <corrupt>')).otherwise(envelope)
@@ -140,23 +178,3 @@ def derive_change_events(
         "timestamp",
     )
 
-
-def widened_envelope_schema(*extra_after: T.StructField) -> T.StructType:
-    """ENVELOPE_SCHEMA with extra columns appended to the `after` struct —
-    the schema-evolution path. Debezium adds source columns to new
-    messages as they appear; `from_json` under the widened schema reads
-    BOTH generations: old envelopes simply yield null for the new fields
-    (PERMISSIVE missing-field semantics), so one decode plan serves the
-    whole topic history without reprocessing. The reference would need
-    its hard-coded DDL and column lists edited by hand
-    (app/utils/postgres.py:100–107, 136, 174–177)."""
-    payload = ENVELOPE_SCHEMA["payload"].dataType
-    after = payload["after"].dataType
-    new_after = T.StructType(list(after.fields) + list(extra_after))
-    new_payload = T.StructType(
-        [
-            f if f.name != "after" else T.StructField("after", new_after)
-            for f in payload.fields
-        ]
-    )
-    return T.StructType([T.StructField("payload", new_payload)])

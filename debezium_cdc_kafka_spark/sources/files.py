@@ -9,7 +9,7 @@ platform actually receives. Rules encoded here:
 - **Schema is always explicit on read** — never ``inferSchema`` (a
   second pass over 100 TB, and type drift between files). The writer's
   DataFrame schema is the contract, same policy as the CDC envelope
-  (`sources/cdc_events.ENVELOPE_SCHEMA`).
+  (`sources/cdc_events.envelope_schema`).
 - **Timestamps round-trip via an explicit format string** with
   microsecond precision; CSV/JSON carry no type system, so the format
   IS the type.

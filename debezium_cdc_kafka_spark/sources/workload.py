@@ -8,18 +8,23 @@ Maps (reference app/utils/generate.py):
   consecutive deletes rewritten to insert)         → hash-derived op +
   lag-window rewrite
 - G2 SQL-string building (:37–117)                 → unnecessary: ops are
-  emitted directly as Debezium envelopes
+  emitted directly as Debezium envelopes (`cdc_events.envelope_json`)
 - G4 fixed-rate loop (:16, 126–170)                → `rate` readStream
   mapped through the same op logic (`workload_rate_stream`)
 
+Both forms publish rows of the customers table, declared once as
+`CUSTOMERS_STATE_SCHEMA`, with per-person columns from `person_columns`.
 The batch form feeds pipeline tests; the rate form demos live streaming.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
+
+from .cdc_events import TOPIC, envelope_json
 
 FIRST_NAMES = (
     "Ivan", "Maria", "Alexei", "Olga", "Dmitri", "Anna", "Sergei", "Elena",
@@ -31,28 +36,46 @@ LAST_NAMES = (
 )
 
 
+# The customers table (the reference's replica, postgres.py:100–107): its
+# one declaration. The envelope schema, the replica DDL and the decoded
+# after-image columns all derive from it.
+CUSTOMERS_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("first_name", T.StringType()),
+        T.StructField("last_name", T.StringType()),
+        T.StructField("email", T.StringType()),
+        T.StructField("_offset", T.LongType()),
+        T.StructField("_deleted", T.BooleanType()),
+    ]
+)
+
+
 def _pick(pool: tuple[str, ...], h):
     arr = F.array(*[F.lit(x) for x in pool])
     return F.element_at(arr, (h % len(pool) + 1).cast("int"))
 
 
-def synthetic_people(spark: SparkSession, n: int, seed: str = "wl") -> DataFrame:
-    """(person_id, first_name, last_name, email) — Faker stand-in, derived
-    from hashes so every engine/run agrees. Emails follow Faker's shape;
-    names contain no quotes, so the reference's sanitization step
-    (generate.py:26–27) is a no-op by construction."""
-    df = spark.range(n).select(F.col("id").alias("person_id"))
-    h1 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":f:"), F.col("person_id"))))
-    h2 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":l:"), F.col("person_id"))))
+def person_columns(person_id: Column, seed: str = "wl") -> dict[str, Column]:
+    """A person's customers-row columns, derived from hashes of its id so
+    every engine/run (and the batch and live generators) agree. Emails
+    follow Faker's shape; names contain no quotes, so the reference's
+    sanitization step (generate.py:26–27) is a no-op by construction."""
+    h1 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":f:"), person_id)))
+    h2 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":l:"), person_id)))
     first, last = _pick(FIRST_NAMES, h1), _pick(LAST_NAMES, h2)
-    return df.select(
-        "person_id",
-        first.alias("first_name"),
-        last.alias("last_name"),
-        F.concat(F.lower(first), F.lit("."), F.lower(last), F.lit("@example.com")).alias(
-            "email"
-        ),
-    )
+    return {
+        "first_name": first,
+        "last_name": last,
+        "email": F.concat(F.lower(first), F.lit("."), F.lower(last), F.lit("@example.com")),
+    }
+
+
+def synthetic_people(spark: SparkSession, n: int, seed: str = "wl") -> DataFrame:
+    """(person_id, first_name, last_name, email) — Faker stand-in."""
+    df = spark.range(n).select(F.col("id").alias("person_id"))
+    cols = person_columns(F.col("person_id"), seed)
+    return df.select("person_id", *[c.alias(name) for name, c in cols.items()])
 
 
 def assign_ops(events: DataFrame, key: str = "person_id", order: str = "seq") -> DataFrame:
@@ -88,32 +111,17 @@ def workload_change_events(spark: SparkSession, n_people: int, n_ops: int) -> Da
         )
     )
     ops = assign_ops(ops)
-    people = synthetic_people(spark, n_people)
-    joined = ops.join(people, "person_id")
-    after = F.when(
-        F.col("op").isin("c", "u"),
-        F.struct(
-            F.col("person_id").alias("id"),
-            F.col("first_name"),
-            F.col("last_name"),
-            F.col("email"),
-        ),
+    person = F.col("person_id")
+    value = envelope_json(
+        CUSTOMERS_STATE_SCHEMA,
+        F.col("op"),
+        {"id": person, **person_columns(person)},
+        F.col("seq"),
     )
-    before = F.when(F.col("op") == "d", F.struct(F.col("person_id").alias("id")))
-    value = F.to_json(
-        F.struct(
-            F.struct(
-                F.col("op").alias("op"),
-                before.alias("before"),
-                after.alias("after"),
-                F.col("seq").alias("ts_ms"),
-            ).alias("payload")
-        )
-    )
-    return joined.select(
+    return ops.select(
         F.col("person_id").cast("string").alias("key"),
         value.alias("value"),
-        F.lit("dbserver1.inventory.customers").alias("topic"),
+        F.lit(TOPIC).alias("topic"),
         F.lit(0).alias("partition"),
         F.col("seq").alias("offset"),
         F.current_timestamp().alias("timestamp"),
@@ -125,7 +133,9 @@ def workload_rate_stream(spark: SparkSession, rows_per_second: int = 1) -> DataF
     logic (minus the lag rewrite, which needs bounded state in streaming;
     `dropDuplicates`-style stateful cleanup applies if required). One row
     every 1/rate seconds replaces the sleep-compensated loop
-    (generate.py:167–170)."""
+    (generate.py:167–170). Rows are customers rows, with the same
+    per-person columns as `workload_change_events`, so the pipeline's
+    consumer decodes them unchanged."""
     rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
     seq = F.col("value")
     person = F.abs(F.xxhash64(F.concat(F.lit("who:"), seq))) % 1000
@@ -133,22 +143,16 @@ def workload_rate_stream(spark: SparkSession, rows_per_second: int = 1) -> DataF
         F.array(F.lit("c"), F.lit("u"), F.lit("d")),
         (F.abs(F.xxhash64(F.concat(F.lit("op:"), seq))) % 3 + 1).cast("int"),
     )
+    value = envelope_json(
+        CUSTOMERS_STATE_SCHEMA,
+        op,
+        {"id": person, **person_columns(person)},
+        F.unix_millis(F.col("timestamp")),
+    )
     return rate.select(
         person.cast("string").alias("key"),
-        F.to_json(
-            F.struct(
-                F.struct(
-                    op.alias("op"),
-                    F.when(op == "d", F.struct(person.alias("id"))).alias("before"),
-                    F.when(
-                        op.isin("c", "u"),
-                        F.struct(person.alias("id"), F.lit(0.0).alias("value")),
-                    ).alias("after"),
-                    F.unix_millis(F.col("timestamp")).alias("ts_ms"),
-                ).alias("payload")
-            )
-        ).alias("value"),
-        F.lit("dbserver1.inventory.customers").alias("topic"),
+        value.alias("value"),
+        F.lit(TOPIC).alias("topic"),
         F.lit(0).alias("partition"),
         seq.alias("offset"),
         F.col("timestamp"),

@@ -17,13 +17,21 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources.cdc_events import after_image
+from .sources.workload import CUSTOMERS_STATE_SCHEMA
+
 log = logging.getLogger(__name__)
 
 TARGET_DB = "inventory"
 TARGET_TABLE = "customers"
 
-# The reference's replica schema (postgres.py:100–107), id + 3 varchars.
-TARGET_DDL_COLUMNS = "id INT NOT NULL, first_name STRING, last_name STRING, email STRING"
+# The reference's replica schema (postgres.py:100–107), id + 3 varchars:
+# the customers row, derived from the table's state schema. The key is
+# NOT NULL, as the envelope's `before` image always carries it.
+TARGET_DDL_COLUMNS = ", ".join(
+    f"{f.name} {f.dataType.simpleString().upper()}" + (" NOT NULL" if f.name == "id" else "")
+    for f in after_image(CUSTOMERS_STATE_SCHEMA).fields
+)
 
 
 def execute_sql(spark: SparkSession, statement: str) -> DataFrame | None:

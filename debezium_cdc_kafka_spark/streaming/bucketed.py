@@ -178,18 +178,13 @@ class BucketedSnapshotTarget:
     def read_view(self, spark: SparkSession) -> DataFrame:
         return state_view(self.read(spark))
 
-    def merge_epoch(
-        self,
-        changes: DataFrame,
-        epoch_id: int,
-        after_cols: tuple[str, ...] = ("value", "ts"),
-    ) -> None:
+    def merge_epoch(self, changes: DataFrame, epoch_id: int) -> None:
         spark = changes.sparkSession
         # buckets this epoch touches: bounded by min(|batch keys|, buckets
         # with data) — a driver-side list of ints, never row data
         touched = {
             r[0]
-            for r in _state_rows(changes, after_cols).select(self.bucket_expr().alias("b"))
+            for r in _state_rows(changes).select(self.bucket_expr().alias("b"))
             .distinct()
             .collect()
         }
@@ -201,7 +196,7 @@ class BucketedSnapshotTarget:
             open(os.path.join(vd, "_SUCCESS"), "w").close()
             return
         current = self.read(spark, before_version=epoch_id, buckets=touched)
-        merged = apply_changes(current, changes, after_cols)
+        merged = apply_changes(current, changes)
         vd = os.path.join(self.path, f"v={epoch_id}")
         # a retried epoch overwrites its own version atomically-enough for
         # the read side: readers require _SUCCESS, written last

@@ -6,6 +6,10 @@ Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
   readStream → decode_envelope → foreachBatch(merge into snapshot target)
   → checkpoint
 
+- The target's state schema is the replicated table's one declaration:
+  records decode under the envelope derived from it, and the merge takes
+  its after-image columns from the decoded frame. A target is any object
+  with that ``schema`` and ``merge_epoch(changes, epoch_id)``.
 - The offset-commit-after-apply contract (consumer.py:74–77,
   at-least-once) maps to Structured Streaming's checkpoint: a batch's
   offsets are committed only after `foreachBatch` returns. A replayed
@@ -37,6 +41,7 @@ from pyspark.sql import types as T
 
 from ..operators.cdc import (
     STATE_SCHEMA,
+    after_columns,
     apply_changes,
     decode_envelope,
     empty_state,
@@ -90,17 +95,22 @@ class ParquetSnapshotTarget:
     def commit(self, df: DataFrame, version: int) -> None:
         df.write.mode("overwrite").parquet(os.path.join(self.path, f"v={version}"))
 
-    def merge_epoch(
-        self,
-        changes: DataFrame,
-        epoch_id: int,
-        after_cols: tuple[str, ...] = ("value", "ts"),
-    ) -> None:
+    def merge_epoch(self, changes: DataFrame, epoch_id: int, after_cols=None) -> None:
         """The foreachBatch body: snapshot-before-this-epoch + batch
-        changes → snapshot at this epoch."""
+        changes → snapshot at this epoch.
+
+        The after-image columns come from the decoded ``changes`` frame.
+        ``after_cols`` is not an option: it is kept only because wrappers
+        written against the older three-argument form (perfbench's
+        ``TracedTarget``) still pass the column tuple positionally. When
+        given, it must equal the derived columns."""
+        if after_cols is not None and tuple(after_cols) != after_columns(changes):
+            raise ValueError(
+                f"after_cols {tuple(after_cols)} != decoded columns {after_columns(changes)}"
+            )
         spark = changes.sparkSession
         current = self.read(spark, before_version=epoch_id)
-        self.commit(apply_changes(current, changes, after_cols), epoch_id)
+        self.commit(apply_changes(current, changes), epoch_id)
 
     def compact(self, keep_last: int = 2) -> list[int]:
         """Drop all but the newest `keep_last` versions (old snapshots only
@@ -121,8 +131,6 @@ def run_cdc_stream(
     target_path: str,
     checkpoint_path: str,
     available_now: bool = True,
-    envelope_schema: T.StructType | None = None,
-    after_cols: tuple[str, ...] = ("value", "ts"),
     state_schema: T.StructType = STATE_SCHEMA,
     dead_letter_path: str | None = None,
     target=None,
@@ -131,16 +139,17 @@ def run_cdc_stream(
 
     ``available_now=True`` drains everything then stops (hermetic tests,
     backfills); ``False`` runs continuously with a 1 s trigger, matching
-    the reference's poll cadence (consumer.py:55). Envelope/state schemas
-    parameterize the replicated domain (events-derived by default, the
-    workload generator's customers table in pipeline.py). ``target`` may
-    be any object with the ``merge_epoch(changes, epoch_id, after_cols)``
-    contract (e.g. bucketed.BucketedSnapshotTarget); default is the
-    ParquetSnapshotTarget at ``target_path``.
+    the reference's poll cadence (consumer.py:55). ``target`` may be any
+    object with a state ``schema`` and ``merge_epoch(changes, epoch_id)``
+    (e.g. bucketed.BucketedSnapshotTarget); default is the
+    ParquetSnapshotTarget at ``target_path`` holding ``state_schema``
+    (the events-derived table by default). The target's schema is the
+    table's one declaration: records are decoded under the envelope
+    derived from it.
     """
     if target is None:
         target = ParquetSnapshotTarget(target_path, schema=state_schema)
-    decoded = decode_envelope(raw_stream, schema=envelope_schema)
+    decoded = decode_envelope(raw_stream, target.schema)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if dead_letter_path is not None:
@@ -152,7 +161,7 @@ def run_cdc_stream(
                 dead_letter_path,
                 epoch_id,
             )
-        target.merge_epoch(batch_df, epoch_id, after_cols)
+        target.merge_epoch(batch_df, epoch_id)
 
     return _start_foreach_batch(decoded, _apply, checkpoint_path, available_now)
 

@@ -103,7 +103,7 @@ def maintain_incremental_agg(
     per-epoch state diffs. Returns (streaming query, AggStore)."""
     target = ParquetSnapshotTarget(target_path)
     aggs = AggStore(agg_path)
-    decoded = decode_envelope(raw_stream)
+    decoded = decode_envelope(raw_stream, target.schema)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession

@@ -8,8 +8,10 @@ hard-codes the `customers` DDL/DML (app/consumer/consumer.py:92,
 app/utils/postgres.py:100–107, 136, 174–177). This module completes that
 design: subscribe once with a topic *pattern*, split each micro-batch by
 the table encoded in the topic name, and merge every table into its own
-versioned snapshot target — the per-table envelope/state schemas are
-configuration, not code.
+versioned snapshot target. A route is ``{table: ParquetSnapshotTarget}``:
+each target's state schema is that table's one declaration, and its
+records decode under the envelope derived from it — configuration, not
+code.
 
 Scale shape: the batch is read once; each route is a filter + the standard
 decode→reduce→merge plan, all narrow until the per-table key shuffle. The
@@ -23,13 +25,10 @@ only logs; we keep the data), so a replayed epoch quarantines them once.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..operators.cdc import STATE_SCHEMA, decode_envelope
+from ..operators.cdc import decode_envelope
 from .cdc_stream import ParquetSnapshotTarget, _quarantine, _start_foreach_batch
 
 
@@ -39,28 +38,15 @@ def table_name(topic: Column) -> Column:
     return F.substring_index(topic, ".", -1)
 
 
-@dataclass
-class TableRoute:
-    """Per-table replication config: where the snapshot lives and what the
-    envelope/state look like. Everything the reference hard-codes per
-    table (postgres.py:100–107, 136–145) as data."""
-
-    target_path: str
-    envelope_schema: T.StructType | None = None
-    state_schema: T.StructType = field(default_factory=lambda: STATE_SCHEMA)
-    after_cols: tuple[str, ...] = ("value", "ts")
-
-    def target(self) -> ParquetSnapshotTarget:
-        return ParquetSnapshotTarget(self.target_path, schema=self.state_schema)
-
-
 def route_batch(
     batch_df: DataFrame,
     epoch_id: int,
-    routes: dict[str, TableRoute],
+    routes: dict[str, ParquetSnapshotTarget],
     unknown_table_path: str | None = None,
 ) -> None:
-    """Apply one micro-batch of raw Kafka records to every routed table."""
+    """Apply one micro-batch of raw Kafka records to every routed table.
+    ``routes`` maps a table name to its snapshot target; each table's
+    records decode under the envelope derived from its target's schema."""
     tagged = batch_df.withColumn("_table", table_name(F.col("topic")))
     if unknown_table_path is not None:
         _quarantine(
@@ -68,16 +54,15 @@ def route_batch(
             unknown_table_path,
             epoch_id,
         )
-    for tbl, route in routes.items():
+    for tbl, target in routes.items():
         sub = tagged.filter(F.col("_table") == tbl).drop("_table")
-        decoded = decode_envelope(sub, schema=route.envelope_schema)
-        route.target().merge_epoch(decoded, epoch_id, route.after_cols)
+        target.merge_epoch(decode_envelope(sub, target.schema), epoch_id)
 
 
 def run_routed_stream(
     spark: SparkSession,
     raw_stream: DataFrame,
-    routes: dict[str, TableRoute],
+    routes: dict[str, ParquetSnapshotTarget],
     checkpoint_path: str,
     available_now: bool = True,
     unknown_table_path: str | None = None,

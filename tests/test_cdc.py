@@ -184,6 +184,22 @@ def test_streaming_pipeline_matches_batch(spark, tmp_path):
     assert target.versions() == versions
 
 
+def test_merge_epoch_after_cols_is_a_check(spark, tmp_path):
+    """merge_epoch's third positional parameter is kept for callers of the
+    older three-argument form; it must name the decoded after-image
+    columns, and a mismatch fails before anything is committed."""
+    from debezium_cdc_kafka_spark.streaming.cdc_stream import ParquetSnapshotTarget
+
+    raw = derive_change_events(spark, SF_SMOKE)
+    batch1 = decode_envelope(raw.filter(F.col("offset") % 2 == 0))
+    batch2 = decode_envelope(raw.filter(F.col("offset") % 2 == 1))
+    target = ParquetSnapshotTarget(str(tmp_path / "t"))
+    target.merge_epoch(batch1, 0, ("value", "ts"))
+    with pytest.raises(ValueError, match="after_cols"):
+        target.merge_epoch(batch2, 1, ("first_name", "last_name", "email"))
+    assert target.versions() == [0]
+
+
 def test_incremental_agg_maintained_per_batch_equals_one_shot(spark):
     """Materialized-view maintenance: process the stream in 3 micro-batches,
     and after each batch update the (n_live, total_cents) aggregate using

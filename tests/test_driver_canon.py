@@ -93,8 +93,9 @@ REGATE_OK: set[str] = {
     "q_cluster_quality_profile",
     "graph_kcore",
     "graph_triangle_count",
-    # previous window (q_dbscan_clusters, q_math_functions, r3 rows)
     "q_dbscan_clusters",
+    "dedup_embedding_cosine_banded",
+    # previous window (q_math_functions, r3 rows)
     "q_math_functions",
     "ann_bruteforce_topk",
     "ann_filtered_topk",
@@ -131,7 +132,6 @@ REGATE_OK: set[str] = {
     "semdedup_survivors",
     "text_bigram_logprob",
     "text_entropy",
-    "text_fingerprint",
 }
 
 

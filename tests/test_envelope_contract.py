@@ -1,0 +1,125 @@
+"""One envelope contract over every producer.
+
+Each generator publishes the Kafka-record shape for one replicated table,
+declared once by its state schema. Decoded under that schema, a
+producer's records are well-formed (except the events stream's deliberate
+corrupt bodies) and every insert/update carries its after-image: a
+producer that publishes another table's row shape shows up as c/u rows
+whose after-image columns are all null.
+"""
+
+from __future__ import annotations
+
+import time
+
+import pytest
+from pyspark.sql import functions as F
+
+from debezium_cdc_kafka_spark.operators.cdc import after_columns, decode_envelope
+from debezium_cdc_kafka_spark.sources.cdc_events import (
+    MALFORMED_MOD,
+    MALFORMED_REM,
+    STATE_SCHEMA,
+    derive_change_events,
+    envelope_json,
+)
+from debezium_cdc_kafka_spark.sources.pydatasource import DebeziumWorkloadDataSource
+from debezium_cdc_kafka_spark.sources.workload import (
+    CUSTOMERS_STATE_SCHEMA,
+    workload_change_events,
+    workload_rate_stream,
+)
+from tests.conftest import SF_SMOKE
+
+
+def _rate_batch(spark):
+    """A bounded batch of the live generator, collected in a memory sink."""
+    q = (
+        workload_rate_stream(spark, rows_per_second=50)
+        .writeStream.format("memory")
+        .queryName("rate_contract")
+        .trigger(processingTime="250 milliseconds")
+        .start()
+    )
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        if spark.sql("SELECT count(*) FROM rate_contract").first()[0] >= 20:
+            break
+        time.sleep(0.5)
+    q.stop()
+    q.awaitTermination(30)
+    return spark.sql("SELECT * FROM rate_contract")
+
+
+def _pydatasource_batch(spark):
+    spark.dataSource.register(DebeziumWorkloadDataSource)
+    return (
+        spark.read.format("debezium_workload")
+        .option("n_partitions", "2")
+        .option("rows_per_partition", "50")
+        .load()
+    )
+
+
+# name -> (records, the table's state schema, deliberately corrupt bodies?)
+PRODUCERS = {
+    "derive_change_events[user_id]": (
+        lambda spark: derive_change_events(spark, SF_SMOKE),
+        STATE_SCHEMA,
+        True,
+    ),
+    "derive_change_events[event_id]": (
+        lambda spark: derive_change_events(spark, SF_SMOKE, key_col="event_id"),
+        STATE_SCHEMA,
+        True,
+    ),
+    "workload_change_events": (
+        lambda spark: workload_change_events(spark, 100, 2000),
+        CUSTOMERS_STATE_SCHEMA,
+        False,
+    ),
+    "workload_rate_stream": (_rate_batch, CUSTOMERS_STATE_SCHEMA, False),
+    "DebeziumWorkloadDataSource": (_pydatasource_batch, CUSTOMERS_STATE_SCHEMA, False),
+}
+
+
+@pytest.mark.parametrize("producer", list(PRODUCERS))
+def test_records_decode_under_the_declared_state_schema(spark, producer):
+    records, schema, corrupt_bodies = PRODUCERS[producer]
+    decoded = decode_envelope(records(spark), schema).cache()
+    try:
+        assert decoded.count() > 0
+        cols = after_columns(decoded)
+        assert cols == tuple(n for n in schema.names if n not in ("id", "_offset", "_deleted"))
+
+        # the events stream corrupts exactly the bodies of events with
+        # event_id % 97 == 13 (offset = 2 * event_id); nothing else may fail
+        deliberate = (F.col("offset") % 2 == 0) & (
+            (F.col("offset") / 2).cast("long") % MALFORMED_MOD == MALFORMED_REM
+        )
+        malformed = decoded.filter("is_malformed")
+        if corrupt_bodies:
+            assert malformed.count() > 0
+            malformed = malformed.filter(~deliberate)
+        assert malformed.count() == 0
+
+        well = decoded.filter(~F.col("is_malformed"))
+        assert well.filter(F.col("id").isNull()).count() == 0
+        empty_image = F.col("op").isin("c", "u")
+        for c in cols:
+            empty_image = empty_image & F.col(f"after.{c}").isNull()
+        assert well.filter(empty_image).count() == 0
+    finally:
+        decoded.unpersist()
+
+
+def test_encoder_rejects_another_tables_columns(spark):
+    """The encoder is bound to the table's declaration: an events-shaped
+    row cannot be published as a customers envelope."""
+    with pytest.raises(ValueError, match="after-image columns"):
+        envelope_json(
+            CUSTOMERS_STATE_SCHEMA,
+            F.lit("c"),
+            {"id": F.lit(1), "value": F.lit(0.0)},
+            F.lit(0),
+        )

@@ -13,9 +13,9 @@ import re
 from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.operators.cdc import apply_changes, decode_envelope
-from debezium_cdc_kafka_spark.pipeline import CUSTOMERS_STATE_SCHEMA
 from debezium_cdc_kafka_spark.plans.inspect import audit_plan, executed_plan, group_stages
 from debezium_cdc_kafka_spark.sources.cdc_events import derive_change_events
+from debezium_cdc_kafka_spark.sources.workload import CUSTOMERS_STATE_SCHEMA
 from debezium_cdc_kafka_spark.streaming.cdc_stream import ParquetSnapshotTarget
 from tests.conftest import SF_SMOKE
 

@@ -10,7 +10,11 @@ from debezium_cdc_kafka_spark.sources.workload import (
     synthetic_people,
     workload_change_events,
 )
-from debezium_cdc_kafka_spark.sql_surface import execute_sql, init_target_table
+from debezium_cdc_kafka_spark.sql_surface import (
+    TARGET_DDL_COLUMNS,
+    execute_sql,
+    init_target_table,
+)
 
 
 def test_synthetic_people_deterministic_and_sanitized(spark):
@@ -48,8 +52,17 @@ def test_ddl_init_idempotent(spark):
     name = init_target_table(spark)
     name2 = init_target_table(spark)  # second run must not fail
     assert name == name2
-    cols = [f.name for f in spark.table(name).schema.fields]
-    assert cols == ["id", "first_name", "last_name", "email"]
+    cols = [(f.name, f.dataType.simpleString()) for f in spark.table(name).schema.fields]
+    # the replica's columns are the customers row the envelopes carry: a
+    # long id (Parquet tables report every column nullable, so NOT NULL is
+    # checked on the DDL itself)
+    assert cols == [
+        ("id", "bigint"),
+        ("first_name", "string"),
+        ("last_name", "string"),
+        ("email", "string"),
+    ]
+    assert TARGET_DDL_COLUMNS.startswith("id BIGINT NOT NULL,")
     assert execute_sql(spark, f"SELECT count(*) FROM {name}") is not None
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.operators.cdc import decode_envelope, materialize
 from debezium_cdc_kafka_spark.sources.pydatasource import DebeziumWorkloadDataSource
+from debezium_cdc_kafka_spark.sources.workload import CUSTOMERS_STATE_SCHEMA
 
 
 def _register(spark):
@@ -55,36 +56,12 @@ def test_keyed_partitioning_and_anti_double_delete(spark):
 
 def test_decodes_through_cdc_pipeline(spark):
     _register(spark)
-    # decode with an explicit customers-shaped envelope schema
-    from pyspark.sql import types as T
-
-    after = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("first_name", T.StringType()),
-            T.StructField("last_name", T.StringType()),
-            T.StructField("email", T.StringType()),
-        ]
-    )
-    env = T.StructType(
-        [
-            T.StructField(
-                "payload",
-                T.StructType(
-                    [
-                        T.StructField("op", T.StringType()),
-                        T.StructField("before", after),
-                        T.StructField("after", after),
-                        T.StructField("ts_ms", T.LongType()),
-                    ]
-                ),
-            )
-        ]
-    )
+    # decode under the customers table's declared state schema
     decoded = decode_envelope(_batch(spark, n_partitions=2, rows_per_partition=50),
-                              schema=env)
+                              CUSTOMERS_STATE_SCHEMA)
     assert decoded.filter(F.col("is_malformed")).count() == 0
-    state = materialize(decoded, after_cols=("first_name", "last_name", "email"))
+    state = materialize(decoded)
+    assert state.columns == CUSTOMERS_STATE_SCHEMA.names
     live = state.filter(~F.col("_deleted"))
     assert state.count() > 0 and live.count() > 0
     # emails survived sanitized generation (no quotes — G1's invariant)

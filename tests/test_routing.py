@@ -9,18 +9,13 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from debezium_cdc_kafka_spark.sources.cdc_events import widened_envelope_schema
 from debezium_cdc_kafka_spark.streaming.cdc_stream import (
     STATE_SCHEMA,
     ParquetSnapshotTarget,
     file_change_stream,
     run_cdc_stream,
 )
-from debezium_cdc_kafka_spark.streaming.routing import (
-    TableRoute,
-    run_routed_stream,
-    table_name,
-)
+from debezium_cdc_kafka_spark.streaming.routing import run_routed_stream, table_name
 from tests.conftest import drop_last_commit
 
 RAW_SCHEMA = "key string, value string, topic string, partition int, offset long, timestamp timestamp"
@@ -69,8 +64,8 @@ def test_multi_table_routing(spark, tmp_path):
     spark.createDataFrame(rows, RAW_SCHEMA).repartition(3).write.parquet(env_dir)
 
     routes = {
-        "customers": TableRoute(str(tmp_path / "t_customers")),
-        "orders": TableRoute(str(tmp_path / "t_orders")),
+        "customers": ParquetSnapshotTarget(str(tmp_path / "t_customers")),
+        "orders": ParquetSnapshotTarget(str(tmp_path / "t_orders")),
     }
     quarantine = str(tmp_path / "unrouted")
     q = run_routed_stream(
@@ -82,13 +77,8 @@ def test_multi_table_routing(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    cust_state = {
-        r.id: r.value
-        for r in routes["customers"].target().read_view(spark).collect()
-    }
-    orders_state = {
-        r.id: r.value for r in routes["orders"].target().read_view(spark).collect()
-    }
+    cust_state = {r.id: r.value for r in routes["customers"].read_view(spark).collect()}
+    orders_state = {r.id: r.value for r in routes["orders"].read_view(spark).collect()}
     assert cust_state == {1: 11.0}  # id=2 deleted, id=1 updated
     assert orders_state == {}  # the one orders row was deleted
     unrouted = spark.read.parquet(quarantine)
@@ -111,7 +101,7 @@ def test_unrouted_quarantine_replay_idempotent(spark, tmp_path):
         ]
         spark.createDataFrame(rows, RAW_SCHEMA).coalesce(1).write.mode("append").parquet(env_dir)
 
-    routes = {"customers": TableRoute(str(tmp_path / "t_customers"))}
+    routes = {"customers": ParquetSnapshotTarget(str(tmp_path / "t_customers"))}
     quarantine = str(tmp_path / "unrouted")
     ckpt = str(tmp_path / "ckpt")
 
@@ -131,20 +121,23 @@ def test_unrouted_quarantine_replay_idempotent(spark, tmp_path):
     drop_last_commit(ckpt)
     drain()
     assert spark.read.parquet(quarantine).count() == 3
-    got = {r.id: r.value for r in routes["customers"].target().read_view(spark).collect()}
+    got = {r.id: r.value for r in routes["customers"].read_view(spark).collect()}
     assert got == {0: 0.0, 1: 10.0, 2: 20.0}
+
+
+# The events-derived table with an `email` column appended to its row.
+WIDENED_STATE_SCHEMA = T.StructType(
+    list(STATE_SCHEMA.fields[:3])
+    + [T.StructField("email", T.StringType())]
+    + list(STATE_SCHEMA.fields[3:])
+)
 
 
 def test_schema_evolution_widened_after(spark, tmp_path):
     """Old-generation envelopes (no `email`) and new-generation ones (with
     it) decode under ONE widened schema; old rows surface null for the new
     column and a later new-generation update backfills it."""
-    widened = widened_envelope_schema(T.StructField("email", T.StringType()))
-    state_schema = T.StructType(
-        list(STATE_SCHEMA.fields[:3])
-        + [T.StructField("email", T.StringType())]
-        + list(STATE_SCHEMA.fields[3:])
-    )
+    state_schema = WIDENED_STATE_SCHEMA
     topic = "dbserver1.inventory.customers"
     rows = [
         rec(1, env("c", None, after(1, 10.0)), topic, 0),  # old gen: no email
@@ -160,8 +153,6 @@ def test_schema_evolution_widened_after(spark, tmp_path):
         file_change_stream(spark, env_dir),
         target_path,
         str(tmp_path / "ckpt"),
-        envelope_schema=widened,
-        after_cols=("value", "ts", "email"),
         state_schema=state_schema,
     )
     q.awaitTermination(120)
@@ -180,9 +171,12 @@ def test_schema_evolution_old_rows_null_new_column(spark):
     email=null, not a parse failure (PERMISSIVE missing-field rule)."""
     from debezium_cdc_kafka_spark.operators.cdc import decode_envelope
 
-    widened = widened_envelope_schema(T.StructField("email", T.StringType()))
     raw = spark.createDataFrame(
         [rec(5, env("c", None, after(5, 50.0)), "t.s.customers", 0)], RAW_SCHEMA
     )
-    row = decode_envelope(raw, schema=widened).select("after.email", "is_malformed").first()
+    row = (
+        decode_envelope(raw, WIDENED_STATE_SCHEMA)
+        .select("after.email", "is_malformed")
+        .first()
+    )
     assert row.email is None and row.is_malformed is False
