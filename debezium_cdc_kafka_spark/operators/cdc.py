@@ -34,7 +34,7 @@ see streaming/cdc_stream.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -48,6 +48,7 @@ from ..sources.cdc_events import (
     STATE_SCHEMA,
     derive_change_events,
     envelope_schema,
+    event_parts,
 )
 
 QUERIES, ORACLES, query = registrar()
@@ -72,14 +73,20 @@ def decode_envelope(raw: DataFrame, schema: T.StructType = STATE_SCHEMA) -> Data
     (`cdc_events.envelope_schema`), and everything downstream takes its
     columns from the decoded ``after`` struct.
     """
-    parsed = raw.filter(F.col("value").isNotNull()).withColumn(
-        "envelope", F.from_json(F.col("value"), envelope_schema(schema))
-    )
+    envelope, decoded = envelope_columns(schema)
+    parsed = raw.filter(F.col("value").isNotNull()).withColumn("envelope", envelope)
+    return parsed.select(*decoded)
+
+
+def envelope_columns(schema: T.StructType) -> tuple[Column, list[Column]]:
+    """`decode_envelope`'s two steps as Columns: the ``value`` parsed under
+    the envelope derived from ``schema``, and the decoded change columns
+    over that parse, named ``envelope``."""
     op = F.col("envelope.payload.op")
     op = F.when(op.isNull() | op.isin(*KNOWN_OPS), op).otherwise(
         F.raise_error(F.concat(F.lit("Unknown option: "), op))
     )
-    return parsed.select(
+    return F.from_json(F.col("value"), envelope_schema(schema)), [
         F.col("envelope.payload.before").alias("before"),
         F.col("envelope.payload.after").alias("after"),
         op.alias("op"),
@@ -91,7 +98,7 @@ def decode_envelope(raw: DataFrame, schema: T.StructType = STATE_SCHEMA) -> Data
         # PERMISSIVE from_json yields a struct with a null payload on corrupt
         # input (not a null struct) — that null payload is the malformed flag
         F.col("envelope.payload").isNull().alias("is_malformed"),
-    )
+    ]
 
 
 def well_formed(changes: DataFrame) -> DataFrame:
@@ -322,18 +329,33 @@ def cdc_strict_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("cdc_incremental_merge", CDC_FINAL_ORACLE)
 def cdc_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental apply ≡ one-shot replay: split the stream into two
-    INTERLEAVED batches (offset parity — a strictly harder split than
-    `foreachBatch`'s time-ordered micro-batches, and one that stays a
-    genuine two-way split however the driver regenerates the data),
+    INTERLEAVED batches (event parity, `cdc_events.event_parts` — a
+    strictly harder split than `foreachBatch`'s time-ordered micro-batches,
+    and a genuine two-way split however the driver regenerates the data),
     MERGE batch 1 into an empty target, then MERGE batch 2 — the result
     must equal the single-pass final state (same oracle), because the
     apply is a commutative idempotent monoid."""
     raw = derive_change_events(spark, sf_dir)
-    batch1 = decode_envelope(raw.filter(F.col("offset") % 2 == 0))
-    batch2 = decode_envelope(raw.filter(F.col("offset") % 2 == 1))
+    batch1, batch2 = (decode_envelope(part) for part in event_parts(raw, 2))
     target1 = apply_changes(empty_state(spark), batch1)
     target2 = apply_changes(target1, batch2)
     return state_view(target2).select("id", F.round("value", 2).alias("value"), "ts")
+
+
+def _key_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived stream's well-formed events (id, op, offset, ts_ms,
+    value) with, in the key's offset order, the key's value after each
+    (``_new``, null for a delete) and before it (``_prior``, lag), and the
+    next event's ts_ms (``valid_to_ms``, lead). Unused windows are pruned."""
+    raw = derive_change_events(spark, sf_dir)
+    w = W.partitionBy("id").orderBy("offset")
+    return (
+        well_formed(decode_envelope(raw))
+        .select("id", "op", "offset", "ts_ms", F.col("after.value").alias("value"))
+        .withColumn("_new", F.when(F.col("op") != "d", F.col("value")))
+        .withColumn("_prior", F.lag("_new").over(w))
+        .withColumn("valid_to_ms", F.lead("ts_ms").over(w))
+    )
 
 
 CDC_INCR_AGG_ORACLE = f"""
@@ -364,13 +386,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the nightly refresh touches only the day's events. Deltas
     are exact integer cents (see functions/money.py), so partial sums
     commute across any batch/partition order."""
-    raw = derive_change_events(spark, sf_dir)
-    ch = well_formed(decode_envelope(raw)).select(
-        "id", "op", "offset", F.col("after.value").alias("value")
-    )
-    w = W.partitionBy("id").orderBy("offset")
-    new_value = F.when(F.col("op") != "d", F.col("value"))
-    ch = ch.withColumn("_new", new_value).withColumn("_prior", F.lag("_new").over(w))
+    ch = _key_history(spark, sf_dir)
     new_cents = F.coalesce(F.round(F.col("_new") * 100).cast("long"), F.lit(0))
     prior_cents = F.coalesce(F.round(F.col("_prior") * 100).cast("long"), F.lit(0))
     live_delta = F.col("_new").isNotNull().cast("long") - F.col(
@@ -407,13 +423,8 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, no self-join, no serial replay — the standard way to land a CDC
     feed as a warehouse dimension. Epoch-ms integers (Debezium's ts_ms)
     keep the interval arithmetic engine-exact."""
-    raw = derive_change_events(spark, sf_dir)
-    ch = well_formed(decode_envelope(raw)).select(
-        "id", "op", "offset", "ts_ms", F.col("after.value").alias("value")
-    )
-    w = W.partitionBy("id").orderBy("offset")
     return (
-        ch.withColumn("valid_to_ms", F.lead("ts_ms").over(w))
+        _key_history(spark, sf_dir)
         .filter(F.col("op") != "d")
         .select(
             "id",
@@ -460,13 +471,7 @@ def cdc_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents so partial sums commute across batches ([[spark-duckdb-oracle-
     parity]]). The same delta stream maintains arbitrary additive
     aggregates over any number of join views from one pass."""
-    raw = derive_change_events(spark, sf_dir)
-    ch = well_formed(decode_envelope(raw)).select(
-        "id", "op", "offset", F.col("after.value").alias("value")
-    )
-    w = W.partitionBy("id").orderBy("offset")
-    new_value = F.when(F.col("op") != "d", F.col("value"))
-    ch = ch.withColumn("_new", new_value).withColumn("_prior", F.lag("_new").over(w))
+    ch = _key_history(spark, sf_dir)
     inserts = ch.filter(F.col("_new").isNotNull()).select(
         "id", F.lit(1).alias("wgt"), F.col("_new").alias("v")
     )
@@ -591,15 +596,10 @@ def cdc_scd2_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the probe becomes a broadcast when the dimension's current
     window fits - the plan is the batch twin of a temporal-table join
     in a stream processor."""
-    raw = derive_change_events(spark, sf_dir)
-    ch = well_formed(decode_envelope(raw)).select(
-        "id", "op", "offset", "ts_ms", F.col("after.value").alias("value")
-    )
-    w = W.partitionBy("id").orderBy("offset")
     dim = (
-        ch.withColumn("vt", F.lead("ts_ms").over(w))
+        _key_history(spark, sf_dir)
         .filter(F.col("op") != "d")
-        .select("id", "value", F.col("ts_ms").alias("vf"), "vt")
+        .select("id", "value", F.col("ts_ms").alias("vf"), F.col("valid_to_ms").alias("vt"))
     )
     probes = (
         load_table(spark, sf_dir, "events")

@@ -83,9 +83,9 @@ def _modules():
 # rewrites (TPC-H q02/q10/q16/q20, the k-means-cell graph and
 # cluster-quality family, graph_kcore and graph_triangle_count), and
 # q_dbscan_clusters / dedup_embedding_cosine_banded (their cosine verify
-# joins now share dedup.cosine_pairs). Then the previous window in its
-# order (q_math_functions and the oldest r3 rows), truncated to fill the
-# 50 slots.
+# joins now share dedup.cosine_pairs), five CDC queries (event split,
+# `cdc._key_history`). Then the previous window in its order
+# (q_math_functions and the oldest r3 rows), truncated to 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
     "ann_pq_adc",
@@ -102,6 +102,11 @@ GATE_ORDER: list[str] = [
     "graph_triangle_count",
     "q_dbscan_clusters",
     "dedup_embedding_cosine_banded",
+    "cdc_incremental_merge",
+    "cdc_incremental_agg",
+    "cdc_ivm_join_view",
+    "cdc_scd2_history",
+    "cdc_scd2_probe",
     # --- previous window, oldest rows first ---
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -114,12 +119,7 @@ GATE_ORDER: list[str] = [
     "ann_mmr_rerank",
     "cdc_anomaly_audit",
     "cdc_final_state",
-    "cdc_incremental_agg",
-    "cdc_incremental_merge",
-    "cdc_ivm_join_view",
     "cdc_op_counts",
-    "cdc_scd2_history",
-    "cdc_scd2_probe",
     "cdc_strict_replay_state",
     "cdc_tx_consistent_state",
     "dedup_clusters",

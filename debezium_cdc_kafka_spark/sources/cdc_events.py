@@ -16,11 +16,13 @@ deterministic so a DuckDB oracle can reproduce the mapping:
 - malformed messages: events with event_id % 97 == 13 get a corrupt JSON
   body — the consumer must skip them (consumer.py:78–79 behavior).
 
-It also holds the envelope codec every table shares: a table is declared
-once by its state schema (`STATE_SCHEMA` here, `workload.
-CUSTOMERS_STATE_SCHEMA` for the customers table); `envelope_schema`
-derives the decode schema from it and `envelope_json` is the one
-Column-side encoder every generator publishes through.
+It also holds the contracts every producer and consumer shares: the
+Kafka record (`RECORD_SCHEMA`, `TOPIC`), which every producer builds and
+the Kafka source is normalised with through `kafka_record`; and the
+envelope codec: a table is declared once by its state schema
+(`STATE_SCHEMA` here, `workload.CUSTOMERS_STATE_SCHEMA` for customers),
+`envelope_schema` derives the decode schema from it and `envelope_json`
+is the one Column-side encoder every generator publishes through.
 """
 
 from __future__ import annotations
@@ -31,7 +33,19 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 
-TOPIC = "dbserver1.inventory.customers"
+TOPIC = "dbserver1.inventory.customers"  # {prefix}.{schema}.{table}
+
+# The Kafka record: the Kafka source's columns, key and value as strings.
+RECORD_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("value", T.StringType()),
+        T.StructField("topic", T.StringType()),
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("offset", T.LongType()),
+        T.StructField("timestamp", T.TimestampType()),
+    ]
+)
 
 # The fraction-of-second format is 6-digit microseconds in both Spark
 # (SSSSSS) and DuckDB (%f), so envelope timestamps round-trip identically.
@@ -112,6 +126,21 @@ def envelope_json(
     )
 
 
+def kafka_record(df: DataFrame, **columns: Column) -> DataFrame:
+    """``df`` as Kafka records: each `RECORD_SCHEMA` column is
+    ``columns[name]`` if given, else ``df``'s own, cast to its declared
+    type. With no ``columns`` this normalises the Kafka source's output."""
+    cols = [columns.get(f.name, F.col(f.name)).cast(f.dataType) for f in RECORD_SCHEMA]
+    return df.select(*[c.alias(f.name) for c, f in zip(cols, RECORD_SCHEMA)])
+
+
+def event_parts(records: DataFrame, n: int) -> list[DataFrame]:
+    """The derived record stream split into ``n`` interleaved parts by
+    event (``offset DIV 2`` is the event id), so a delete and its
+    tombstone land in the same part and every part carries envelopes."""
+    return [records.filter(F.expr("offset DIV 2") % n == k) for k in range(n)]
+
+
 def op_expr():
     """event_type → Debezium op code (the generator's op chooser inverted)."""
     return (
@@ -124,9 +153,8 @@ def op_expr():
 def derive_change_events(
     spark: SparkSession, sf_dir: str, key_col: str = "user_id"
 ) -> DataFrame:
-    """events table → Kafka-record-shaped DataFrame:
-    (key string, value string|null, topic, partition int, offset long,
-    timestamp) — the exact input contract of `operators.cdc.decode_envelope`.
+    """events table → Kafka records (`RECORD_SCHEMA`, value null for a
+    tombstone) — the exact input contract of `operators.cdc.decode_envelope`.
 
     ``key_col`` is the replicated table's primary key. The default
     (user_id, ~1.2k distinct at sf0.1) models the reference's
@@ -163,18 +191,13 @@ def derive_change_events(
             record(F.lit(None).cast("string"), F.col("event_id") * 2 + 1),
         ),
     ).otherwise(F.array(record(body, F.col("event_id") * 2)))
-    return ev.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.explode(records).alias("_rec"),
-        F.lit(TOPIC).alias("topic"),
-        F.lit(0).alias("partition"),
-        F.col("ts").alias("timestamp"),
-    ).select(
-        "key",
-        F.col("_rec.value").alias("value"),
-        "topic",
-        "partition",
-        F.col("_rec.offset").alias("offset"),
-        "timestamp",
+    return kafka_record(
+        ev.select(key_col, F.explode(records).alias("_rec"), "ts"),
+        key=F.col(key_col),
+        value=F.col("_rec.value"),
+        topic=F.lit(TOPIC),
+        partition=F.lit(0),
+        offset=F.col("_rec.offset"),
+        timestamp=F.col("ts"),
     )
 

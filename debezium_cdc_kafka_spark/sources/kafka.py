@@ -12,9 +12,10 @@ options:
   (offsets commit only after the foreachBatch apply) (S4)
 
 No broker ships in this environment, so `kafka_change_stream` only builds
-the reader; tests cover the option mapping, and
-`streaming.cdc_stream.file_change_stream` stands in as the transport.
-The decoded output schema is identical either way.
+the reader; tests cover the option mapping and its normalisation
+(`cdc_events.kafka_record`, run over a frame shaped like the source's
+output), and `streaming.cdc_stream.file_change_stream` stands in as the
+transport. Both deliver `cdc_events.RECORD_SCHEMA`.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .cdc_events import kafka_record
 
 
 def kafka_options(
@@ -53,17 +55,8 @@ def kafka_change_stream(
     starting_offset: int | None = None,
     num_partitions: int = 1,
 ) -> DataFrame:
-    """readStream over Kafka, normalized to the engine's Kafka-record shape
-    (key/value as strings + topic/partition/offset/timestamp)."""
+    """readStream over Kafka, normalised to the engine's Kafka record."""
     reader = spark.readStream.format("kafka")
     for k, v in kafka_options(bootstrap_servers, topic, starting_offset, num_partitions).items():
         reader = reader.option(k, v)
-    df = reader.load()
-    return df.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
+    return kafka_record(reader.load())

@@ -10,8 +10,8 @@ DebeziumWorkloadDataSource)`` the stream is just
     spark.read.format("debezium_workload").option("rows_per_partition", 500)
     spark.readStream.format("debezium_workload")...
 
-and emits the engine's Kafka-record shape (key/value/topic/partition/
-offset/timestamp), decodable by operators.cdc.decode_envelope unchanged.
+and emits the engine's Kafka record (`cdc_events.RECORD_SCHEMA`), decodable
+by operators.cdc.decode_envelope, with `workload.person_columns`' person per id.
 
 The source reproduces the broker contract the CDC pipeline depends on:
 
@@ -47,15 +47,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .cdc_events import RECORD_SCHEMA, TOPIC
 from .workload import FIRST_NAMES, LAST_NAMES
 
-TOPIC = "dbserver1.inventory.customers"
 _EPOCH = 1_700_000_000  # fixed base so timestamps are deterministic
-
-SCHEMA = (
-    "key string, value string, topic string, partition int, "
-    "offset long, timestamp timestamp"
-)
 
 
 def _h(*parts) -> int:
@@ -181,8 +176,8 @@ class DebeziumWorkloadDataSource(DataSource):
     def name(cls) -> str:
         return "debezium_workload"
 
-    def schema(self) -> str:
-        return SCHEMA
+    def schema(self) -> StructType:
+        return RECORD_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _WorkloadBatchReader(_Opts(self.options))

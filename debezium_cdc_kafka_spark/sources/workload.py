@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from .cdc_events import TOPIC, envelope_json
+from ..functions.hashing import md5_long
+from .cdc_events import TOPIC, envelope_json, kafka_record
 
 FIRST_NAMES = (
     "Ivan", "Maria", "Alexei", "Olga", "Dmitri", "Anna", "Sergei", "Elena",
@@ -56,13 +57,14 @@ def _pick(pool: tuple[str, ...], h):
     return F.element_at(arr, (h % len(pool) + 1).cast("int"))
 
 
-def person_columns(person_id: Column, seed: str = "wl") -> dict[str, Column]:
-    """A person's customers-row columns, derived from hashes of its id so
-    every engine/run (and the batch and live generators) agree. Emails
-    follow Faker's shape; names contain no quotes, so the reference's
-    sanitization step (generate.py:26–27) is a no-op by construction."""
-    h1 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":f:"), person_id)))
-    h2 = F.abs(F.xxhash64(F.concat(F.lit(seed), F.lit(":l:"), person_id)))
+def person_columns(person_id: Column) -> dict[str, Column]:
+    """A person's customers-row columns, picked by ``md5_long("f:<id>")``
+    / ``"l:<id>"`` (as `pydatasource._row` does) so all three generators
+    agree on each id's person. Emails follow Faker's shape; names contain
+    no quotes, so the reference's sanitization step (generate.py:26–27)
+    is a no-op by construction."""
+    h1 = md5_long(F.concat(F.lit("f:"), person_id))
+    h2 = md5_long(F.concat(F.lit("l:"), person_id))
     first, last = _pick(FIRST_NAMES, h1), _pick(LAST_NAMES, h2)
     return {
         "first_name": first,
@@ -71,10 +73,10 @@ def person_columns(person_id: Column, seed: str = "wl") -> dict[str, Column]:
     }
 
 
-def synthetic_people(spark: SparkSession, n: int, seed: str = "wl") -> DataFrame:
+def synthetic_people(spark: SparkSession, n: int) -> DataFrame:
     """(person_id, first_name, last_name, email) — Faker stand-in."""
     df = spark.range(n).select(F.col("id").alias("person_id"))
-    cols = person_columns(F.col("person_id"), seed)
+    cols = person_columns(F.col("person_id"))
     return df.select("person_id", *[c.alias(name) for name, c in cols.items()])
 
 
@@ -101,7 +103,7 @@ def assign_ops(events: DataFrame, key: str = "person_id", order: str = "seq") ->
 def workload_change_events(spark: SparkSession, n_people: int, n_ops: int) -> DataFrame:
     """A second, independent Debezium-shaped change stream (the CDC tests'
     primary stream derives from the events table; this one exercises the
-    generator path). Returns the engine's Kafka-record shape."""
+    generator path). Returns Kafka records (`cdc_events.RECORD_SCHEMA`)."""
     ops = (
         spark.range(n_ops)
         .select(F.col("id").alias("seq"))
@@ -118,13 +120,14 @@ def workload_change_events(spark: SparkSession, n_people: int, n_ops: int) -> Da
         {"id": person, **person_columns(person)},
         F.col("seq"),
     )
-    return ops.select(
-        F.col("person_id").cast("string").alias("key"),
-        value.alias("value"),
-        F.lit(TOPIC).alias("topic"),
-        F.lit(0).alias("partition"),
-        F.col("seq").alias("offset"),
-        F.current_timestamp().alias("timestamp"),
+    return kafka_record(
+        ops,
+        key=person,
+        value=value,
+        topic=F.lit(TOPIC),
+        partition=F.lit(0),
+        offset=F.col("seq"),
+        timestamp=F.current_timestamp(),
     )
 
 
@@ -149,11 +152,6 @@ def workload_rate_stream(spark: SparkSession, rows_per_second: int = 1) -> DataF
         {"id": person, **person_columns(person)},
         F.unix_millis(F.col("timestamp")),
     )
-    return rate.select(
-        person.cast("string").alias("key"),
-        value.alias("value"),
-        F.lit(TOPIC).alias("topic"),
-        F.lit(0).alias("partition"),
-        seq.alias("offset"),
-        F.col("timestamp"),
+    return kafka_record(
+        rate, key=person, value=value, topic=F.lit(TOPIC), partition=F.lit(0), offset=seq
     )

@@ -3,13 +3,13 @@
 Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
 → apply one SQL statement → commit the offset. Here the same contract is:
 
-  readStream → decode_envelope → foreachBatch(merge into snapshot target)
-  → checkpoint
+  readStream (Kafka records) → decode per table → foreachBatch(merge) →
+  checkpoint
 
-- The target's state schema is the replicated table's one declaration:
-  records decode under the envelope derived from it, and the merge takes
-  its after-image columns from the decoded frame. A target is any object
-  with that ``schema`` and ``merge_epoch(changes, epoch_id)``.
+- `cdc_epochs` is the one epoch body of every CDC stream (here, routing.py,
+  incremental_agg.py). Per table it decodes the records under the target's
+  state schema (the table's one declaration) and calls the target's
+  ``merge_epoch(changes, epoch_id)``.
 - The offset-commit-after-apply contract (consumer.py:74–77,
   at-least-once) maps to Structured Streaming's checkpoint: a batch's
   offsets are committed only after `foreachBatch` returns. A replayed
@@ -24,18 +24,20 @@ Reference loop (app/consumer/consumer.py:55–75): poll one message → decode
   read with the target's pinned schema (no Parquet footer-inference job),
   an empty target reads as a JVM-side empty state (no Python-worker
   tasks), and the merge is one aggregate, so one shuffle on the key.
-- The dead-letter sink (`dead_letter_path`) is versioned the same way:
-  each epoch overwrites its own ``epoch=<id>`` directory, so a replayed
-  epoch quarantines its malformed rows once, not twice. routing.py's
-  unroutable-topic sink shares that writer (`_quarantine`).
+- The dead-letter sink (``dead_letter_path``) keeps what the reference
+  logs and skips (consumer.py:78–79): malformed and unroutable records,
+  whole, with a ``reason``. Each epoch overwrites its own ``epoch=<id>``
+  directory once, so a replayed epoch quarantines nothing twice.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from functools import reduce
+from operator import or_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,10 +45,11 @@ from ..operators.cdc import (
     STATE_SCHEMA,
     after_columns,
     apply_changes,
-    decode_envelope,
     empty_state,
+    envelope_columns,
     state_view,
 )
+from ..sources.cdc_events import RECORD_SCHEMA
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
@@ -125,52 +128,71 @@ class ParquetSnapshotTarget:
         return doomed
 
 
+def cdc_epochs(
+    raw_stream: DataFrame, routes: list[tuple[Column, object]], dead_letter_path: str | None
+):
+    """The epoch body every CDC stream runs, ``apply(batch, epoch_id)``,
+    and the stream it runs on. ``routes`` pairs a predicate on the raw
+    Kafka records with the target they merge into.
+
+    Each route's records are decoded under ``target.schema`` in the
+    stream's own plan (struct column ``_route<i>``): a record is parsed
+    once, inside its micro-batch, and an epoch plans only its merges.
+    ``apply`` merges each route's decoded records into its target and
+    returns them, in route order. With a ``dead_letter_path`` it first
+    writes every route's malformed records and the records no route
+    selects whole (`RECORD_SCHEMA`), with a ``reason``, in ONE overwrite
+    of ``<path>/epoch=<id>``: a second write there would erase the first.
+    """
+    stream = raw_stream
+    for i, (selects, target) in enumerate(routes):
+        envelope, decoded = envelope_columns(target.schema)
+        picked = selects & F.col("value").isNotNull()
+        stream = stream.withColumn("envelope", F.when(picked, envelope))
+        stream = stream.withColumn(f"_route{i}", F.when(picked, F.struct(*decoded)))
+    routed = F.coalesce(reduce(or_, [selects for selects, _ in routes]), F.lit(False))
+    bad = [(F.col(f"_route{i}.is_malformed"), "malformed") for i in range(len(routes))]
+    kept = [(c, F.lit(why).alias("reason")) for c, why in [*bad, (~routed, "unroutable")]]
+
+    def apply(batch: DataFrame, epoch_id: int) -> list[DataFrame]:
+        if dead_letter_path is not None:
+            rows = [batch.filter(c).select(*RECORD_SCHEMA.names, why) for c, why in kept]
+            path = os.path.join(dead_letter_path, f"epoch={epoch_id}")
+            reduce(DataFrame.unionByName, rows).write.mode("overwrite").parquet(path)
+        changes = [
+            batch.filter(F.col(f"_route{i}").isNotNull()).select(f"_route{i}.*")
+            for i in range(len(routes))
+        ]
+        for decoded, (_, target) in zip(changes, routes):
+            target.merge_epoch(decoded, epoch_id)
+        return changes
+
+    return stream.drop("envelope"), apply
+
+
 def run_cdc_stream(
     spark: SparkSession,
     raw_stream: DataFrame,
     target_path: str,
     checkpoint_path: str,
     available_now: bool = True,
-    state_schema: T.StructType = STATE_SCHEMA,
     dead_letter_path: str | None = None,
     target=None,
 ):
-    """Wire a raw Kafka-shaped stream into the snapshot target.
+    """Wire a raw Kafka-record stream into one snapshot target, which
+    takes every record whatever its topic.
 
     ``available_now=True`` drains everything then stops (hermetic tests,
     backfills); ``False`` runs continuously with a 1 s trigger, matching
     the reference's poll cadence (consumer.py:55). ``target`` may be any
     object with a state ``schema`` and ``merge_epoch(changes, epoch_id)``
-    (e.g. bucketed.BucketedSnapshotTarget); default is the
-    ParquetSnapshotTarget at ``target_path`` holding ``state_schema``
-    (the events-derived table by default). The target's schema is the
-    table's one declaration: records are decoded under the envelope
-    derived from it.
+    (e.g. bucketed.BucketedSnapshotTarget); default is the events-derived
+    table's ParquetSnapshotTarget at ``target_path``.
     """
     if target is None:
-        target = ParquetSnapshotTarget(target_path, schema=state_schema)
-    decoded = decode_envelope(raw_stream, target.schema)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if dead_letter_path is not None:
-            # quarantine malformed envelopes with provenance (epoch +
-            # offset) instead of silently dropping them — the reference
-            # only logs these (consumer.py:78–79).
-            _quarantine(
-                batch_df.filter(F.col("is_malformed")).select("id", "offset"),
-                dead_letter_path,
-                epoch_id,
-            )
-        target.merge_epoch(batch_df, epoch_id)
-
-    return _start_foreach_batch(decoded, _apply, checkpoint_path, available_now)
-
-
-def _quarantine(rows: DataFrame, path: str, epoch_id: int) -> None:
-    """Write an epoch's quarantined rows to ``<path>/epoch=<id>``. Each
-    epoch overwrites its own directory, so a replayed epoch is not counted
-    twice; ``epoch`` reads back as a column through partition discovery."""
-    rows.write.mode("overwrite").parquet(os.path.join(path, f"epoch={epoch_id}"))
+        target = ParquetSnapshotTarget(target_path)
+    stream, body = cdc_epochs(raw_stream, [(F.lit(True), target)], dead_letter_path)
+    return _start_foreach_batch(stream, body, checkpoint_path, available_now)
 
 
 def _start_foreach_batch(stream: DataFrame, apply, checkpoint_path: str, available_now: bool):
@@ -188,8 +210,8 @@ def _start_foreach_batch(stream: DataFrame, apply, checkpoint_path: str, availab
 def file_change_stream(
     spark: SparkSession, envelope_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """Kafka-record-shaped stream from Parquet files (hermetic stand-in for
-    the broker; same schema as sources.kafka.kafka_change_stream output).
+    """Kafka-record stream (`RECORD_SCHEMA`) from Parquet files: the
+    hermetic stand-in for the broker (sources.kafka.kafka_change_stream).
 
     `max_files_per_trigger` is the micro-batch sizing knob — the file-source
     analogue of Kafka's maxOffsetsPerTrigger. 1 maximizes per-epoch
@@ -197,18 +219,8 @@ def file_change_stream(
     per-batch fixed costs (plan, checkpoint commit, target version) over
     more rows — the trigger-knee sweep in bench_stream.py measures where
     that amortization stops paying."""
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("topic", T.StringType()),
-            T.StructField("partition", T.IntegerType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("timestamp", T.TimestampType()),
-        ]
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(RECORD_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(envelope_dir)
     )

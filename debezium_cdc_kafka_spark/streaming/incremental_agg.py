@@ -2,10 +2,10 @@
 
 The batch proof lives in `operators.cdc.cdc_incremental_agg`: per-event
 deltas telescope per key, so their sum equals the final-state aggregate.
-This module is the streaming production shape of the same idea: a
-`foreachBatch` body that keeps a running (n_live, total_cents) aggregate
-up to date per micro-batch WITHOUT ever rescanning the materialized
-table.
+This module is the streaming production shape of the same idea: after
+the shared epoch body (`cdc_stream.cdc_epochs`) merges a micro-batch, a
+running (n_live, total_cents) aggregate is brought up to date WITHOUT
+ever rescanning the materialized table.
 
 Per epoch, the delta is computed as a state diff restricted to the keys
 the batch touched:
@@ -40,8 +40,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import decode_envelope, well_formed
-from .cdc_stream import ParquetSnapshotTarget, _start_foreach_batch
+from ..operators.cdc import well_formed
+from .cdc_stream import ParquetSnapshotTarget, _start_foreach_batch, cdc_epochs
 
 _AGG_VERSION_RE = re.compile(r"^agg-v=(\d+)\.json$")
 
@@ -103,18 +103,18 @@ def maintain_incremental_agg(
     per-epoch state diffs. Returns (streaming query, AggStore)."""
     target = ParquetSnapshotTarget(target_path)
     aggs = AggStore(agg_path)
-    decoded = decode_envelope(raw_stream, target.schema)
+    stream, merge = cdc_epochs(raw_stream, [(F.lit(True), target)], None)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+        (changes,) = merge(batch_df, epoch_id)
         s = batch_df.sparkSession
         # The old and new states are the target's versions either side of
-        # this epoch's merge; the new one is read back from the committed
-        # version, as a cluster reads the MERGE output for the delta.
-        keys = well_formed(batch_df).select("id").distinct()
+        # this epoch's merge, both read back from committed versions, as a
+        # cluster reads the MERGE output for the delta.
+        keys = well_formed(changes).select("id").distinct()
         n_old, c_old = _agg_restricted(target.read(s, before_version=epoch_id), keys)
-        target.merge_epoch(batch_df, epoch_id)
         n_new, c_new = _agg_restricted(target.read(s, before_version=epoch_id + 1), keys)
         n_prev, c_prev = aggs.read(before_version=epoch_id)
         aggs.commit(epoch_id, n_prev + (n_new - n_old), c_prev + (c_new - c_old))
 
-    return _start_foreach_batch(decoded, _apply, checkpoint_path, available_now), aggs
+    return _start_foreach_batch(stream, _apply, checkpoint_path, available_now), aggs

@@ -13,14 +13,14 @@ each target's state schema is that table's one declaration, and its
 records decode under the envelope derived from it — configuration, not
 code.
 
-Scale shape: the batch is read once; each route is a filter + the standard
-decode→reduce→merge plan, all narrow until the per-table key shuffle. The
-routing column derives from `topic` (already in every Kafka record), so
-fan-out adds no extra scan of the stream. Unroutable topics (a table added
-to the capture list before a route is configured) are quarantined with
-provenance rather than dropped — same policy and same per-epoch
-``epoch=<id>`` layout as the malformed dead-letter sink (consumer.py:78–79
-only logs; we keep the data), so a replayed epoch quarantines them once.
+Each epoch runs `cdc_stream.cdc_epochs` with one route per table: a
+filter on the table named by `topic` (already in every Kafka record) +
+the standard decode→reduce→merge plan, narrow until the per-table key
+shuffle. Nothing is dropped silently: with a ``dead_letter_path``, a
+routed table's malformed records and the records of unroutable topics
+(a table added to the capture list before a route is configured) are
+quarantined whole with their ``reason`` (consumer.py:78–79 only logs),
+once per epoch.
 """
 
 from __future__ import annotations
@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import decode_envelope
-from .cdc_stream import ParquetSnapshotTarget, _quarantine, _start_foreach_batch
+from .cdc_stream import ParquetSnapshotTarget, _start_foreach_batch, cdc_epochs
 
 
 def table_name(topic: Column) -> Column:
@@ -38,36 +37,16 @@ def table_name(topic: Column) -> Column:
     return F.substring_index(topic, ".", -1)
 
 
-def route_batch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    routes: dict[str, ParquetSnapshotTarget],
-    unknown_table_path: str | None = None,
-) -> None:
-    """Apply one micro-batch of raw Kafka records to every routed table.
-    ``routes`` maps a table name to its snapshot target; each table's
-    records decode under the envelope derived from its target's schema."""
-    tagged = batch_df.withColumn("_table", table_name(F.col("topic")))
-    if unknown_table_path is not None:
-        _quarantine(
-            tagged.filter(~F.col("_table").isin(*routes)).drop("_table"),
-            unknown_table_path,
-            epoch_id,
-        )
-    for tbl, target in routes.items():
-        sub = tagged.filter(F.col("_table") == tbl).drop("_table")
-        target.merge_epoch(decode_envelope(sub, target.schema), epoch_id)
-
-
 def run_routed_stream(
     spark: SparkSession,
     raw_stream: DataFrame,
     routes: dict[str, ParquetSnapshotTarget],
     checkpoint_path: str,
     available_now: bool = True,
-    unknown_table_path: str | None = None,
+    dead_letter_path: str | None = None,
 ):
-    """One subscription, N tables: the streaming twin of `route_batch`.
+    """One subscription, N tables. ``routes`` maps a table name to its
+    snapshot target; a record goes to the route its topic's table names.
 
     With a real broker the source is
     ``readStream.format("kafka").option("subscribePattern",
@@ -75,8 +54,7 @@ def run_routed_stream(
     same record shape from files. Checkpointing is shared — one stream,
     one offset log — so all tables advance atomically, mirroring the
     reference's single consumer group (consumer.py:30)."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        route_batch(batch_df, epoch_id, routes, unknown_table_path)
-
-    return _start_foreach_batch(raw_stream, _apply, checkpoint_path, available_now)
+    table = table_name(F.col("topic"))
+    by_table = [(table == name, target) for name, target in routes.items()]
+    stream, body = cdc_epochs(raw_stream, by_table, dead_letter_path)
+    return _start_foreach_batch(stream, body, checkpoint_path, available_now)

@@ -21,11 +21,9 @@ from debezium_cdc_kafka_spark.operators.cdc import (
     state_view,
     well_formed,
 )
-from debezium_cdc_kafka_spark.sources.cdc_events import derive_change_events
+from debezium_cdc_kafka_spark.sources.cdc_events import RECORD_SCHEMA, derive_change_events
 from debezium_cdc_kafka_spark.sources.kafka import kafka_options
 from tests.conftest import SF_SMOKE
-
-RAW_SCHEMA = "key string, value string, topic string, partition int, offset long, timestamp timestamp"
 
 
 def env(op, before=None, after=None):
@@ -34,7 +32,7 @@ def env(op, before=None, after=None):
 
 def raw_df(spark, rows):
     return spark.createDataFrame(
-        [(r[0], r[1], "t", 0, r[2], None) for r in rows], RAW_SCHEMA
+        [(r[0], r[1], "t", 0, r[2], None) for r in rows], RECORD_SCHEMA
     )
 
 

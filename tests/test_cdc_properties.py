@@ -20,10 +20,7 @@ from debezium_cdc_kafka_spark.operators.cdc import (
     empty_state,
     state_view,
 )
-
-RAW_SCHEMA = (
-    "key string, value string, topic string, partition int, offset long, timestamp timestamp"
-)
+from debezium_cdc_kafka_spark.sources.cdc_events import RECORD_SCHEMA
 
 
 def _env(op, key, val):
@@ -68,7 +65,7 @@ def batches_of(spark, events, cut_points):
             for offset, (op, key, val) in list(enumerate(events))[lo:hi]
         ]
         if rows:
-            out.append(decode_envelope(spark.createDataFrame(rows, RAW_SCHEMA)))
+            out.append(decode_envelope(spark.createDataFrame(rows, RECORD_SCHEMA)))
     return out
 
 

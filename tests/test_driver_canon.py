@@ -95,6 +95,11 @@ REGATE_OK: set[str] = {
     "graph_triangle_count",
     "q_dbscan_clusters",
     "dedup_embedding_cosine_banded",
+    "cdc_incremental_merge",
+    "cdc_incremental_agg",
+    "cdc_ivm_join_view",
+    "cdc_scd2_history",
+    "cdc_scd2_probe",
     # previous window (q_math_functions, r3 rows)
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -107,12 +112,7 @@ REGATE_OK: set[str] = {
     "ann_mmr_rerank",
     "cdc_anomaly_audit",
     "cdc_final_state",
-    "cdc_incremental_agg",
-    "cdc_incremental_merge",
-    "cdc_ivm_join_view",
     "cdc_op_counts",
-    "cdc_scd2_history",
-    "cdc_scd2_probe",
     "cdc_strict_replay_state",
     "cdc_tx_consistent_state",
     "dedup_clusters",

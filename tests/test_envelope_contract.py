@@ -1,11 +1,14 @@
-"""One envelope contract over every producer.
+"""One record contract and one envelope contract over every producer.
 
-Each generator publishes the Kafka-record shape for one replicated table,
-declared once by its state schema. Decoded under that schema, a
-producer's records are well-formed (except the events stream's deliberate
-corrupt bodies) and every insert/update carries its after-image: a
-producer that publishes another table's row shape shows up as c/u rows
-whose after-image columns are all null.
+Each producer emits the declared Kafka record (`cdc_events.RECORD_SCHEMA`)
+for one replicated table, declared once by its state schema. Decoded
+under that schema, a producer's records are well-formed (except the
+events stream's deliberate corrupt bodies) and every insert/update
+carries its after-image: a producer that publishes another table's row
+shape shows up as c/u rows whose after-image columns are all null. The
+producers are the four generators, the file transport that stands in for
+the broker, and the Kafka source's normalisation, run over a frame shaped
+like the source's output (no broker ships here).
 """
 
 from __future__ import annotations
@@ -19,9 +22,11 @@ from debezium_cdc_kafka_spark.operators.cdc import after_columns, decode_envelop
 from debezium_cdc_kafka_spark.sources.cdc_events import (
     MALFORMED_MOD,
     MALFORMED_REM,
+    RECORD_SCHEMA,
     STATE_SCHEMA,
     derive_change_events,
     envelope_json,
+    kafka_record,
 )
 from debezium_cdc_kafka_spark.sources.pydatasource import DebeziumWorkloadDataSource
 from debezium_cdc_kafka_spark.sources.workload import (
@@ -29,10 +34,11 @@ from debezium_cdc_kafka_spark.sources.workload import (
     workload_change_events,
     workload_rate_stream,
 )
+from debezium_cdc_kafka_spark.streaming.cdc_stream import file_change_stream
 from tests.conftest import SF_SMOKE
 
 
-def _rate_batch(spark):
+def _rate_batch(spark, tmp_path):
     """A bounded batch of the live generator, collected in a memory sink."""
     q = (
         workload_rate_stream(spark, rows_per_second=50)
@@ -51,7 +57,7 @@ def _rate_batch(spark):
     return spark.sql("SELECT * FROM rate_contract")
 
 
-def _pydatasource_batch(spark):
+def _pydatasource_batch(spark, tmp_path):
     spark.dataSource.register(DebeziumWorkloadDataSource)
     return (
         spark.read.format("debezium_workload")
@@ -61,32 +67,75 @@ def _pydatasource_batch(spark):
     )
 
 
+def _file_stream_batch(spark, tmp_path):
+    """The smoke change stream replayed through the file transport,
+    collected in a memory sink."""
+    d = str(tmp_path / "topic")
+    derive_change_events(spark, SF_SMOKE).write.parquet(d)
+    q = (
+        file_change_stream(spark, d)
+        .writeStream.format("memory")
+        .queryName("file_contract")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return spark.sql("SELECT * FROM file_contract")
+
+
+def _kafka_source_batch(spark, tmp_path):
+    """The smoke change stream as the Kafka source delivers it (binary
+    key/value, plus timestampType), through the source's normalisation."""
+    raw = derive_change_events(spark, SF_SMOKE)
+    delivered = raw.select(
+        F.col("key").cast("binary").alias("key"),
+        F.col("value").cast("binary").alias("value"),
+        "topic",
+        "partition",
+        "offset",
+        "timestamp",
+        F.lit(0).alias("timestampType"),
+    )
+    assert [delivered.schema[c].dataType.simpleString() for c in ("key", "value")] == [
+        "binary",
+        "binary",
+    ]
+    return kafka_record(delivered)
+
+
 # name -> (records, the table's state schema, deliberately corrupt bodies?)
 PRODUCERS = {
     "derive_change_events[user_id]": (
-        lambda spark: derive_change_events(spark, SF_SMOKE),
+        lambda spark, tmp_path: derive_change_events(spark, SF_SMOKE),
         STATE_SCHEMA,
         True,
     ),
     "derive_change_events[event_id]": (
-        lambda spark: derive_change_events(spark, SF_SMOKE, key_col="event_id"),
+        lambda spark, tmp_path: derive_change_events(spark, SF_SMOKE, key_col="event_id"),
         STATE_SCHEMA,
         True,
     ),
     "workload_change_events": (
-        lambda spark: workload_change_events(spark, 100, 2000),
+        lambda spark, tmp_path: workload_change_events(spark, 100, 2000),
         CUSTOMERS_STATE_SCHEMA,
         False,
     ),
     "workload_rate_stream": (_rate_batch, CUSTOMERS_STATE_SCHEMA, False),
     "DebeziumWorkloadDataSource": (_pydatasource_batch, CUSTOMERS_STATE_SCHEMA, False),
+    "file_change_stream": (_file_stream_batch, STATE_SCHEMA, True),
+    "kafka_record[Kafka source]": (_kafka_source_batch, STATE_SCHEMA, True),
 }
 
 
 @pytest.mark.parametrize("producer", list(PRODUCERS))
-def test_records_decode_under_the_declared_state_schema(spark, producer):
-    records, schema, corrupt_bodies = PRODUCERS[producer]
-    decoded = decode_envelope(records(spark), schema).cache()
+def test_records_decode_under_the_declared_state_schema(spark, tmp_path, producer):
+    make, schema, corrupt_bodies = PRODUCERS[producer]
+    records = make(spark, tmp_path)
+    # the declared record: names and types (a literal column is non-null)
+    assert [(f.name, f.dataType) for f in records.schema] == [
+        (f.name, f.dataType) for f in RECORD_SCHEMA
+    ]
+    decoded = decode_envelope(records, schema).cache()
     try:
         assert decoded.count() > 0
         cols = after_columns(decoded)

@@ -10,11 +10,9 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
-from debezium_cdc_kafka_spark.operators.cdc import apply_changes, decode_envelope
+from debezium_cdc_kafka_spark.operators.cdc import apply_changes, decode_envelope, well_formed
 from debezium_cdc_kafka_spark.plans.inspect import audit_plan, executed_plan, group_stages
-from debezium_cdc_kafka_spark.sources.cdc_events import derive_change_events
+from debezium_cdc_kafka_spark.sources.cdc_events import derive_change_events, event_parts
 from debezium_cdc_kafka_spark.sources.workload import CUSTOMERS_STATE_SCHEMA
 from debezium_cdc_kafka_spark.streaming.cdc_stream import ParquetSnapshotTarget
 from tests.conftest import SF_SMOKE
@@ -22,11 +20,13 @@ from tests.conftest import SF_SMOKE
 
 def _parts(spark, tmp_path, n: int):
     """The smoke change stream, staged as Parquet and split into `n`
-    decoded parts by offset, each with the same scan partitioning."""
+    decoded parts by event, each with the same scan partitioning. Every
+    part carries envelopes to merge, not just tombstones."""
     d = str(tmp_path / "raw")
     derive_change_events(spark, SF_SMOKE).repartition(2).write.parquet(d)
-    raw = spark.read.parquet(d)
-    return [decode_envelope(raw.filter(F.col("offset") % n == k)) for k in range(n)]
+    parts = [decode_envelope(p) for p in event_parts(spark.read.parquet(d), n)]
+    assert all(well_formed(p).count() > 0 for p in parts)
+    return parts
 
 
 def _in_group(spark, group: str, fn):

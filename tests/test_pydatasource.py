@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.operators.cdc import decode_envelope, materialize
 from debezium_cdc_kafka_spark.sources.pydatasource import DebeziumWorkloadDataSource
-from debezium_cdc_kafka_spark.sources.workload import CUSTOMERS_STATE_SCHEMA
+from debezium_cdc_kafka_spark.sources.workload import (
+    CUSTOMERS_STATE_SCHEMA,
+    workload_change_events,
+)
 
 
 def _register(spark):
@@ -93,3 +96,30 @@ def test_stream_drains_to_batch_fixpoint(spark, tmp_path):
         key=lambda r: (r.partition, r.offset),
     )
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_one_person_per_id_across_generators(spark):
+    """The DataSource and the DataFrame generator publish the same
+    customers row (first_name, last_name, email) for every id they share."""
+    _register(spark)
+
+    def people(records):
+        after = F.col("after")
+        rows = (
+            decode_envelope(records, CUSTOMERS_STATE_SCHEMA)
+            .filter(F.col("op").isin("c", "u"))
+            .select("id", after.first_name, after.last_name, after.email)
+            .distinct()
+            .collect()
+        )
+        out: dict = {}
+        for r in rows:
+            out.setdefault(r.id, set()).add(tuple(r)[1:])
+        assert all(len(v) == 1 for v in out.values())  # one person per id
+        return {k: v.pop() for k, v in out.items()}
+
+    source = people(_batch(spark, n_partitions=2, rows_per_partition=50))
+    generated = people(workload_change_events(spark, 50, 500))
+    shared = source.keys() & generated.keys()
+    assert len(shared) >= 20
+    assert {i: source[i] for i in shared} == {i: generated[i] for i in shared}

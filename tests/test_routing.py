@@ -9,6 +9,7 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_cdc_kafka_spark.sources.cdc_events import RECORD_SCHEMA
 from debezium_cdc_kafka_spark.streaming.cdc_stream import (
     STATE_SCHEMA,
     ParquetSnapshotTarget,
@@ -17,8 +18,6 @@ from debezium_cdc_kafka_spark.streaming.cdc_stream import (
 )
 from debezium_cdc_kafka_spark.streaming.routing import run_routed_stream, table_name
 from tests.conftest import drop_last_commit
-
-RAW_SCHEMA = "key string, value string, topic string, partition int, offset long, timestamp timestamp"
 
 
 def env(op, before=None, after=None, ts_ms=0):
@@ -61,7 +60,7 @@ def test_multi_table_routing(spark, tmp_path):
         rec(2, env("d", {"id": 2}, None), cust, 6),
     ]
     env_dir = str(tmp_path / "envelopes")
-    spark.createDataFrame(rows, RAW_SCHEMA).repartition(3).write.parquet(env_dir)
+    spark.createDataFrame(rows, RECORD_SCHEMA).repartition(3).write.parquet(env_dir)
 
     routes = {
         "customers": ParquetSnapshotTarget(str(tmp_path / "t_customers")),
@@ -73,7 +72,7 @@ def test_multi_table_routing(spark, tmp_path):
         file_change_stream(spark, env_dir),
         routes,
         str(tmp_path / "ckpt"),
-        unknown_table_path=quarantine,
+        dead_letter_path=quarantine,
     )
     q.awaitTermination(120)
 
@@ -82,45 +81,52 @@ def test_multi_table_routing(spark, tmp_path):
     assert cust_state == {1: 11.0}  # id=2 deleted, id=1 updated
     assert orders_state == {}  # the one orders row was deleted
     unrouted = spark.read.parquet(quarantine)
-    assert [r.topic for r in unrouted.collect()] == [unknown]
+    assert [(r.topic, r.reason) for r in unrouted.collect()] == [(unknown, "unroutable")]
     # quarantined rows keep full provenance for later replay
     assert {"key", "value", "topic", "offset", "epoch"} <= set(unrouted.columns)
 
 
 def test_unrouted_quarantine_replay_idempotent(spark, tmp_path):
-    """A crash between apply and checkpoint commit replays the last epoch;
-    its unroutable records must be quarantined once, not twice. Every
-    epoch carries one unroutable record, so the replayed one does too."""
+    """Every epoch carries one unroutable record and one malformed record
+    on a routed topic: both are quarantined whole, with their reason. A
+    crash between apply and checkpoint commit replays the last epoch; its
+    records must be quarantined once, not twice."""
     cust = "dbserver1.inventory.customers"
     unknown = "dbserver1.inventory.products"
+    corrupt = '{"payload": <corrupt>'
     env_dir = str(tmp_path / "envelopes")
     for i in range(3):
         rows = [
-            rec(i, env("c", None, after(i, 10.0 * i)), cust, 2 * i),
-            rec(i, env("c", None, after(i, 1.0)), unknown, 2 * i + 1),
+            rec(i, env("c", None, after(i, 10.0 * i)), cust, 3 * i),
+            rec(i, corrupt, cust, 3 * i + 1),
+            rec(i, env("c", None, after(i, 1.0)), unknown, 3 * i + 2),
         ]
-        spark.createDataFrame(rows, RAW_SCHEMA).coalesce(1).write.mode("append").parquet(env_dir)
+        spark.createDataFrame(rows, RECORD_SCHEMA).coalesce(1).write.mode("append").parquet(env_dir)
 
     routes = {"customers": ParquetSnapshotTarget(str(tmp_path / "t_customers"))}
-    quarantine = str(tmp_path / "unrouted")
+    quarantine = str(tmp_path / "dead_letter")
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
         q = run_routed_stream(
-            spark,
-            file_change_stream(spark, env_dir),
-            routes,
-            ckpt,
-            unknown_table_path=quarantine,
+            spark, file_change_stream(spark, env_dir), routes, ckpt, dead_letter_path=quarantine
         )
         q.awaitTermination(120)
 
+    def counts():
+        dead = spark.read.parquet(quarantine)
+        return {r.reason: r["count"] for r in dead.groupBy("reason").count().collect()}
+
     drain()
-    assert spark.read.parquet(quarantine).count() == 3
+    assert counts() == {"malformed": 3, "unroutable": 3}
+    bad = spark.read.parquet(quarantine).filter(F.col("reason") == "malformed").collect()
+    assert {(r.topic, r.value, r.offset) for r in bad} == {
+        (cust, corrupt, 3 * i + 1) for i in range(3)
+    }
 
     drop_last_commit(ckpt)
     drain()
-    assert spark.read.parquet(quarantine).count() == 3
+    assert counts() == {"malformed": 3, "unroutable": 3}
     got = {r.id: r.value for r in routes["customers"].read_view(spark).collect()}
     assert got == {0: 0.0, 1: 10.0, 2: 20.0}
 
@@ -145,7 +151,7 @@ def test_schema_evolution_widened_after(spark, tmp_path):
         rec(1, env("u", {"id": 1}, after(1, 11.0, email="a@x.io")), topic, 2),
     ]
     env_dir = str(tmp_path / "envelopes")
-    spark.createDataFrame(rows, RAW_SCHEMA).write.parquet(env_dir)
+    spark.createDataFrame(rows, RECORD_SCHEMA).write.parquet(env_dir)
 
     target_path = str(tmp_path / "target")
     q = run_cdc_stream(
@@ -153,7 +159,7 @@ def test_schema_evolution_widened_after(spark, tmp_path):
         file_change_stream(spark, env_dir),
         target_path,
         str(tmp_path / "ckpt"),
-        state_schema=state_schema,
+        target=ParquetSnapshotTarget(target_path, state_schema),
     )
     q.awaitTermination(120)
 
@@ -172,7 +178,7 @@ def test_schema_evolution_old_rows_null_new_column(spark):
     from debezium_cdc_kafka_spark.operators.cdc import decode_envelope
 
     raw = spark.createDataFrame(
-        [rec(5, env("c", None, after(5, 50.0)), "t.s.customers", 0)], RAW_SCHEMA
+        [rec(5, env("c", None, after(5, 50.0)), "t.s.customers", 0)], RECORD_SCHEMA
     )
     row = (
         decode_envelope(raw, WIDENED_STATE_SCHEMA)

@@ -28,6 +28,7 @@ def test_envelope_schema_evolution_tolerated(spark):
     columns). Decoding with OUR schema must ignore unknown fields and
     null out missing ones — never fail the stream."""
     from debezium_cdc_kafka_spark.operators.cdc import decode_envelope
+    from debezium_cdc_kafka_spark.sources.cdc_events import RECORD_SCHEMA
 
     evolved = json.dumps(
         {
@@ -44,7 +45,7 @@ def test_envelope_schema_evolution_tolerated(spark):
     missing_fields = json.dumps({"payload": {"op": "c", "after": {"id": 2}}})
     raw = spark.createDataFrame(
         [("1", evolved, "t", 0, 0, None), ("2", missing_fields, "t", 0, 1, None)],
-        "key string, value string, topic string, partition int, offset long, timestamp timestamp",
+        RECORD_SCHEMA,
     )
     out = {r.id: r for r in decode_envelope(raw).collect()}
     assert out[1].op == "c" and out[1].after.value == 5.0  # extra fields ignored

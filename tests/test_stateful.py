@@ -54,6 +54,7 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
     from debezium_cdc_kafka_spark.sources.cdc_events import (
         MALFORMED_MOD,
         MALFORMED_REM,
+        RECORD_SCHEMA,
         derive_change_events,
     )
     from debezium_cdc_kafka_spark.streaming.cdc_stream import (
@@ -84,7 +85,12 @@ def test_dead_letter_sink_quarantines_malformed(spark, tmp_path):
         .count()
     )
     assert dead.count() == n_expected
-    assert set(dead.columns) == {"id", "offset", "epoch"}
+    # each dead letter is the whole record, with why and when it was kept
+    assert dead.columns == [*RECORD_SCHEMA.names, "reason", "epoch"]
+    assert {r.reason for r in dead.select("reason").distinct().collect()} == {"malformed"}
+    assert {r.value for r in dead.select("value").distinct().collect()} == {'{"payload": <corrupt>'}
+    bad_events = {(r.offset // 2) % MALFORMED_MOD for r in dead.select("offset").collect()}
+    assert bad_events == {MALFORMED_REM}
 
     # crash between apply and checkpoint commit: the last epoch replays on
     # restart and must not quarantine its rows a second time
