@@ -72,9 +72,17 @@ def decode_envelope(raw: DataFrame, schema: T.StructType = STATE_SCHEMA) -> Data
     customers table); the envelope is derived from it
     (`cdc_events.envelope_schema`), and everything downstream takes its
     columns from the decoded ``after`` struct.
+
+    The parse is the output of a one-element ``explode``, not a projected
+    column: Catalyst pushes a filter on a projected column below its
+    projection by inlining the expression, so a downstream
+    ``well_formed`` would run ``from_json`` a second time in the pushed
+    filter. A filter on a generator's output stays above it.
     """
     envelope, decoded = envelope_columns(schema)
-    parsed = raw.filter(F.col("value").isNotNull()).withColumn("envelope", envelope)
+    parsed = raw.filter(F.col("value").isNotNull()).select(
+        "offset", F.explode(F.array(envelope)).alias("envelope")
+    )
     return parsed.select(*decoded)
 
 

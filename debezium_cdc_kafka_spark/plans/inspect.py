@@ -33,6 +33,27 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def codegen_stats(spark) -> dict:
+    """Classes Janino has compiled in this JVM so far, the milliseconds it
+    took (both from `CodegenMetrics`/`CodeGenerator`, JVM-wide and
+    cumulative: diff two readings around the work) and the metaspace
+    in use, where generated classes live. A query whose second run still
+    compiles has missed the generated-class cache."""
+    jvm = spark._jvm
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    metaspace = next(
+        p.getUsage().getUsed()
+        for p in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        if p.getName() == "Metaspace"
+    )
+    return {
+        "compiles": jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        .getCount(),
+        "compile_ms": round(compile_ns / 1e6, 1),
+        "metaspace_mb": round(metaspace / 2**20, 1),
+    }
+
+
 @dataclass
 class PlanFacts:
     pushed_filters: list[str]

@@ -84,7 +84,9 @@ def _modules():
 # cluster-quality family, graph_kcore and graph_triangle_count), and
 # q_dbscan_clusters / dedup_embedding_cosine_banded (their cosine verify
 # joins now share dedup.cosine_pairs), five CDC queries (event split,
-# `cdc._key_history`). Then the previous window in its order
+# `cdc._key_history`), then every other query over `cdc.decode_envelope`
+# (its parse moved into a one-element explode so a well-formed filter no
+# longer parses each record twice). Then the previous window in its order
 # (q_math_functions and the oldest r3 rows), truncated to 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
@@ -107,6 +109,13 @@ GATE_ORDER: list[str] = [
     "cdc_ivm_join_view",
     "cdc_scd2_history",
     "cdc_scd2_probe",
+    "cdc_final_state",
+    "cdc_op_counts",
+    "cdc_strict_replay_state",
+    "cdc_tx_consistent_state",
+    "cdc_op_mix_drift",
+    "cdc_hot_keys",
+    "cdc_key_lifecycle",
     # --- previous window, oldest rows first ---
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -118,10 +127,6 @@ GATE_ORDER: list[str] = [
     "ann_lsh_multiprobe",
     "ann_mmr_rerank",
     "cdc_anomaly_audit",
-    "cdc_final_state",
-    "cdc_op_counts",
-    "cdc_strict_replay_state",
-    "cdc_tx_consistent_state",
     "dedup_clusters",
     "dedup_embedding_cosine",
     "dedup_exact",
@@ -136,9 +141,6 @@ GATE_ORDER: list[str] = [
     "q_doc_chunking",
     "q_embedding_covariance",
     "q_label_centroid_outliers",
-    "semdedup_survivors",
-    "text_bigram_logprob",
-    "text_entropy",
 ]
 
 GATE_SLOTS = 50

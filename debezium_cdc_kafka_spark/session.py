@@ -12,6 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# One pass over the whole registry compiles 4,232 distinct classes at
+# sf0.001 and 4,246 at sf0.01 (local[4], unbounded cache; a second pass
+# recompiles 238, the queries whose code changes per run): the smallest
+# round value that holds them all.
+CODEGEN_CACHE_CLASSES = 5000
 
 
 def _initial_heap_opts(driver_mem: str) -> str:
@@ -81,6 +86,30 @@ def get_spark(
         # (setops/sessionize/cdc_final_state +15–30%, bracketed off/on/off
         # runs). The 100 TB answer is file layout (many ≥128 MB files),
         # not a split floor on one small file.
+        # Generated-class cache (JVM-wide, static). Spark's default of 100
+        # entries is smaller than one pass of perfbench's ten
+        # queries_modules queries (~180 classes), so every pass
+        # recompiled ~175 of them (~1.3 s of Janino time, read from
+        # CodegenMetrics). Holding the whole registry costs metaspace,
+        # not heap: 77 → 222 MB over a first registry pass.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_CLASSES))
+        # PySpark captures the Python call site of every DataFrame/Column
+        # API call (a stack walk plus ~4 py4j round trips per call), only
+        # to print Python file:line lines in an error's DataFrame query
+        # context. Off, building cdc_final_state takes 575 py4j commands
+        # instead of 1,644. Errors keep their error class and message;
+        # only those Python file:line lines go.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Streaming checkpoints through FileSystem.rename instead of
+        # FileContext: without libhadoop, FileContext renames fork
+        # `readlink` (104 forks per 4-batch cdc_update drain, none with
+        # this manager). Local and HDFS renames are atomic, which is all
+        # the manager needs.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -100,6 +100,13 @@ REGATE_OK: set[str] = {
     "cdc_ivm_join_view",
     "cdc_scd2_history",
     "cdc_scd2_probe",
+    "cdc_final_state",
+    "cdc_op_counts",
+    "cdc_strict_replay_state",
+    "cdc_tx_consistent_state",
+    "cdc_op_mix_drift",
+    "cdc_hot_keys",
+    "cdc_key_lifecycle",
     # previous window (q_math_functions, r3 rows)
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -111,10 +118,6 @@ REGATE_OK: set[str] = {
     "ann_lsh_multiprobe",
     "ann_mmr_rerank",
     "cdc_anomaly_audit",
-    "cdc_final_state",
-    "cdc_op_counts",
-    "cdc_strict_replay_state",
-    "cdc_tx_consistent_state",
     "dedup_clusters",
     "dedup_embedding_cosine",
     "dedup_exact",
@@ -129,9 +132,6 @@ REGATE_OK: set[str] = {
     "q_doc_chunking",
     "q_embedding_covariance",
     "q_label_centroid_outliers",
-    "semdedup_survivors",
-    "text_bigram_logprob",
-    "text_entropy",
 }
 
 

@@ -315,6 +315,7 @@ def sweep(spark, args, names):
         def over() -> bool:
             return bool(args.timeout_s) and time.monotonic() - t0 >= args.timeout_s
 
+        c0 = pi.codegen_stats(spark)["compiles"]
         try:
             with wd:
                 if args.timeout_s:
@@ -329,9 +330,11 @@ def sweep(spark, args, names):
         # cancel landed between two of its jobs and it went on to finish
         status = "DISK_BUDGET" if wd.tripped else "TIMEOUT" if over() else "ok"
         row = {"status": status, "time_s": round(time.monotonic() - t0, 3),
-               "scratch_peak_mb": round(wd.peak_scratch_bytes / 2**20, 1)}
+               "scratch_peak_mb": round(wd.peak_scratch_bytes / 2**20, 1),
+               "compiles": pi.codegen_stats(spark)["compiles"] - c0}
         print(f"{status} {name}: {row['time_s']}s "
-              f"(scratch peak {row['scratch_peak_mb']:.0f} MB)", file=sys.stderr)
+              f"(scratch peak {row['scratch_peak_mb']:.0f} MB, "
+              f"{row['compiles']} classes compiled)", file=sys.stderr)
         return row
 
     for name, row in each_query(spark, args.sf, names, body, warm=True):
@@ -350,26 +353,32 @@ def sweep(spark, args, names):
 
 def profile(spark, args, names):
     """Which stage burns the time: per-stage tasks, wall, run and CPU time
-    and bytes for the last of --reps runs (plus one discarded warm-up)."""
+    and bytes for the last of --reps runs (plus one discarded warm-up), and
+    the classes each run compiled: a query that still compiles after the
+    warm-up generates different code each run, so it misses the
+    generated-class cache every time."""
     sc = spark.sparkContext
 
     def body(name, build):
-        times = []
+        times, compiles = [], []
         for i in range(args.reps + 1):
             sc.setJobGroup(f"{name}@{i}", name)
+            c0 = pi.codegen_stats(spark)["compiles"]
             t0 = time.monotonic()
             build().count()
             times.append(round(time.monotonic() - t0, 3))
+            compiles.append(pi.codegen_stats(spark)["compiles"] - c0)
             release_persisted(spark)
         stages = pi.group_stages(spark, f"{name}@{args.reps}")
         print(f"{name}: reps={times[1:]} min={min(times[1:]):.3f} "
-              f"(warm-up {times[0]}); last rep: {len(stages)} stages")
+              f"(warm-up {times[0]}); compiles per rep={compiles[1:]} "
+              f"(warm-up {compiles[0]}); last rep: {len(stages)} stages")
         print(" stage  tasks  wallMs  runMs  cpuMs     shWr      shRd     input  name")
         for s in stages:
             print(f" {s['stage']:>5}  {s['tasks']:>5}  {s['wall_ms']:>6}  {s['run_ms']:>5}  "
                   f"{s['cpu_ms']:>5}  {s['shuffle_write_bytes']:>8}  "
                   f"{s['shuffle_read_bytes']:>8}  {s['input_bytes']:>8}  {s['name']}")
-        return {"reps_s": times[1:], "stages": stages}
+        return {"reps_s": times[1:], "compiles": compiles[1:], "stages": stages}
 
     return dict(each_query(spark, args.sf, names, body))
 
