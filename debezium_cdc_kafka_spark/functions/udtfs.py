@@ -2,8 +2,9 @@
 
 Completes the user-function matrix from SURVEY §2.6: scalar `udf`,
 Arrow `pandas_udf` (operators/stats.py), grouped `applyInPandas` /
-`mapInPandas` (multimodal), stateful `applyInPandasWithState`
-(streaming/stateful.py) — and here the table-valued form: one input row
+`mapInPandas` (multimodal), the per-key state machine of
+streaming/strict_replay.py (the one stream state a Spark aggregate
+cannot keep) — and here the table-valued form: one input row
 → N output rows, usable in SQL FROM/LATERAL position.
 
 The demo UDTF emits the same sliding chunk spans as the pure-column

@@ -63,9 +63,10 @@ def decode_envelope(raw: DataFrame, schema: T.StructType = STATE_SCHEMA) -> Data
     C1 envelope decode (bytes→JSON→payload ≙ consumer.py:65–71) via
     `from_json`; C2 tombstone skip (consumer.py:66–68); C3 malformed
     containment (consumer.py:78–79): unparseable JSON nulls out under
-    PERMISSIVE mode and is flagged, not dropped — callers route it to a
-    dead-letter sink or count it. C9 strictness: unknown op codes raise,
-    like the reference's ``RuntimeError`` (postgres.py:260–261).
+    PERMISSIVE mode and is flagged, not dropped, as is an envelope with no
+    ``id`` in either image — callers route it to a dead-letter sink or
+    count it. C9 strictness: unknown op codes raise, like the reference's
+    ``RuntimeError`` (postgres.py:260–261).
 
     `schema` is the replicated table's state schema (the events-derived
     table by default, e.g. `workload.CUSTOMERS_STATE_SCHEMA` for the
@@ -94,18 +95,18 @@ def envelope_columns(schema: T.StructType) -> tuple[Column, list[Column]]:
     op = F.when(op.isNull() | op.isin(*KNOWN_OPS), op).otherwise(
         F.raise_error(F.concat(F.lit("Unknown option: "), op))
     )
+    key = F.coalesce(F.col("envelope.payload.after.id"), F.col("envelope.payload.before.id"))
     return F.from_json(F.col("value"), envelope_schema(schema)), [
         F.col("envelope.payload.before").alias("before"),
         F.col("envelope.payload.after").alias("after"),
         op.alias("op"),
-        F.coalesce(F.col("envelope.payload.after.id"), F.col("envelope.payload.before.id")).alias(
-            "id"
-        ),
+        key.alias("id"),
         F.col("envelope.payload.ts_ms").alias("ts_ms"),
         F.col("offset"),
         # PERMISSIVE from_json yields a struct with a null payload on corrupt
-        # input (not a null struct) — that null payload is the malformed flag
-        F.col("envelope.payload").isNull().alias("is_malformed"),
+        # input (not a null struct), so the key is null there too. A null
+        # key is malformed either way: it would merge as a null-key row.
+        key.isNull().alias("is_malformed"),
     ]
 
 

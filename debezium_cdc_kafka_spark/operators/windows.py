@@ -16,7 +16,7 @@ the event log by user_id at ingest so this shuffle disappears.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -114,11 +114,29 @@ GROUP BY user_id, session_no
 """
 
 
+def session_row_aggs() -> list[Column]:
+    """The session row over one session's events, as aggregates: its start
+    (µs-precision text), event count, duration in whole seconds (HALF_UP,
+    µs-exact) and value total to the cent. The batch `q_sessionize_30m` and
+    the streaming `stateful.session_stream` both aggregate with these."""
+    return [
+        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
+        F.count(F.lit(1)).alias("n_events"),
+        F.round((F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 1e6)
+        .cast("bigint")
+        .alias("duration_sec"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    ]
+
+
 @query("q_sessionize_30m", SESSION_ORACLE)
 def q_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization with a 30-minute inactivity gap: lag + cumulative
-    sum of gap-breaks — same semantics as streaming `session_window(ts,
-    '30 minutes')` (equivalence proven in tests/test_streaming.py)."""
+    sum of gap-breaks. A gap of exactly 30 minutes stays in one session.
+    The same sessions as streaming `session_window(ts, '30 minutes')`:
+    tests/test_streaming.py::test_streaming_session_window_equals_batch
+    and tests/test_sessions_stream.py (`stateful.session_stream`, in-order,
+    out-of-order and exact-gap inputs) prove it."""
     ev = load_table(spark, sf_dir, "events")
     w_ord = W.partitionBy("user_id").orderBy("ts", "event_id")
     # µs-exact gap arithmetic (unix_micros, not a cast-to-seconds) so the
@@ -134,14 +152,7 @@ def q_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         sess.groupBy("user_id", F.col("session_no").cast("int").alias("session_no"))
-        .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round((F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 1e6)
-            .cast("bigint")
-            .alias("duration_sec"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
+        .agg(*session_row_aggs())
     )
 
 

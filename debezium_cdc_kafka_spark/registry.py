@@ -86,8 +86,11 @@ def _modules():
 # joins now share dedup.cosine_pairs), five CDC queries (event split,
 # `cdc._key_history`), then every other query over `cdc.decode_envelope`
 # (its parse moved into a one-element explode so a well-formed filter no
-# longer parses each record twice). Then the previous window in its order
-# (q_math_functions and the oldest r3 rows), truncated to 50 slots.
+# longer parses each record twice, and a record with a null key is now
+# malformed), and q_sessionize_30m (its aggregates moved to
+# `windows.session_row_aggs`, shared with the session stream). Then the
+# previous window in its order (q_math_functions and the oldest r3
+# rows), truncated to 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
     "ann_pq_adc",
@@ -116,6 +119,7 @@ GATE_ORDER: list[str] = [
     "cdc_op_mix_drift",
     "cdc_hot_keys",
     "cdc_key_lifecycle",
+    "q_sessionize_30m",
     # --- previous window, oldest rows first ---
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -140,7 +144,6 @@ GATE_ORDER: list[str] = [
     "q_bm25_search",
     "q_doc_chunking",
     "q_embedding_covariance",
-    "q_label_centroid_outliers",
 ]
 
 GATE_SLOTS = 50

@@ -27,7 +27,8 @@ TARGET_TABLE = "customers"
 
 # The reference's replica schema (postgres.py:100–107), id + 3 varchars:
 # the customers row, derived from the table's state schema. The key is
-# NOT NULL, as the envelope's `before` image always carries it.
+# declared NOT NULL, but Parquet tables do not enforce it: the envelope
+# decode does, by flagging a record with no key as malformed.
 TARGET_DDL_COLUMNS = ", ".join(
     f"{f.name} {f.dataType.simpleString().upper()}" + (" NOT NULL" if f.name == "id" else "")
     for f in after_image(CUSTOMERS_STATE_SCHEMA).fields

@@ -13,8 +13,7 @@ partition-pruned MERGE expressed in plain Parquet:
 - each epoch MERGEs only the buckets its batch touches, and writes a
   new version of THOSE buckets only (`<path>/v=<epoch>/b=<k>/`);
 - a reader assembles the current state by taking, per bucket, the
-  newest version that wrote it — exactly how Delta/Iceberg readers
-  resolve per-partition file sets from the log/manifest.
+  newest version that wrote it.
 
 Two bucket functions, chosen by workload:
 

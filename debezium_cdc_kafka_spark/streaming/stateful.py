@@ -1,68 +1,49 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Per-key streaming state kept in Spark's own stateful operators.
 
-The reference's only state is the Kafka consumer offset; these operators
-are the north-star streaming extensions where Spark's built-in windows
-aren't enough — arbitrary per-key state machines with timeouts.
+The reference's only state is the Kafka consumer offset. These streams add
+per-key state that outlives a micro-batch, and both are built-in
+Structured Streaming aggregates, so the state lives in the JVM's versioned
+state store and no Python worker runs per batch:
 
-`running_user_stats` keeps a per-user running (count, sum, max) across
-micro-batches and emits an updated row per key per batch — the streaming
-analogue of a grouped aggregation whose state must outlive any window.
+- `running_user_stats`: per-user running (count, sum, max) as an
+  update-mode ``groupBy``, one updated row per key per batch; the same
+  numbers as the batch ``groupBy`` over every event seen so far, NaN and
+  null included.
+- `session_stream`: 30-minute gap sessions as a watermarked
+  ``session_window`` in append mode; a session row appears once, when the
+  watermark passes its end. The row is `windows.session_row_aggs`, the
+  batch `q_sessionize_30m`'s own aggregates.
 
-Scale: state is per-key and O(1) per key (three numbers), partitioned by
-the grouping key across executors with checkpointed state store backing —
-the standard Structured Streaming stateful layout.
+`strict_replay.py` is the one Python state machine left, because the
+reference's no-PK multiset has no built-in operator.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
-OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, max_value double"
-STATE_SCHEMA = "n long, total double, mx double"
-
-
-def _update_user_stats(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, total, mx = state.get
-    else:
-        n, total, mx = 0, 0.0, float("-inf")
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())  # pandas sum skips NaN
-        batch_max = pdf["value"].max()
-        if len(pdf) and pd.notna(batch_max):
-            mx = max(mx, float(batch_max))
-    state.update((n, total, mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "total_value": [round(total, 2)],
-            # don't leak the -inf sentinel when no finite value has arrived
-            "max_value": [None if mx == float("-inf") else mx],
-        }
-    )
+from ..operators.windows import session_row_aggs
 
 
 def running_user_stats(events_stream: DataFrame) -> DataFrame:
-    """Per-user running stats over an unbounded stream. Emits the updated
-    aggregate for every key seen in each micro-batch (update semantics)."""
+    """Per-user running stats over an unbounded stream (update mode)."""
+    return events_stream.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+        F.max("value").alias("max_value"),
+    )
+
+
+def session_stream(events_stream: DataFrame) -> DataFrame:
+    """events stream → closed-session stream (append mode). The 0 s
+    watermark closes a session as soon as the stream's event time passes
+    its last event + 30 minutes; an event older than the watermark when it
+    arrives is dropped and counted in the progress's
+    ``numRowsDroppedByWatermark``."""
     return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_stats,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        events_stream.withWatermark("ts", "0 seconds")
+        .groupBy("user_id", F.session_window("ts", "30 minutes"))
+        .agg(*session_row_aggs())
+        .select("user_id", "session_start", "n_events", "duration_sec", "total_value")
     )

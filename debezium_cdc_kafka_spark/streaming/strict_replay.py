@@ -4,24 +4,23 @@
 final multiset (duplicate inserts, no-op updates/deletes on missing keys —
 postgres.py:100–107 has no PK) in batch window algebra. This module keeps
 the same semantics incrementally over an unbounded stream with
-`applyInPandasWithState`:
+`applyInPandasWithState`: a no-PK multiset has no built-in stateful
+operator, so this is the engine's one Python state machine (the other
+per-key streams are Spark aggregates, streaming/stateful.py).
 
-- state per key = the key's event log (offset, op, value) accumulated so
-  far. Replays are order-insensitive: the log is sorted at emission, so
-  late or out-of-order micro-batches cannot corrupt the multiset —
-  matching the batch monoid's guarantees.
+- state per key = only what the multiset reads: the highest delete
+  offset, the update with the highest offset, the inserts above that
+  delete, and ``version``. O(live rows) per key, not O(events): an insert
+  at or below the delete offset can never come back, so it is dropped.
+  Every field is a max or a filter against a max, so late or out-of-order
+  micro-batches fold to the same state — the batch monoid's guarantee.
 - each batch emits the key's current multiset rows tagged with a
   monotonically increasing `version`; readers take max-version per key.
-
-Scale note: keeping the raw log per key is the demonstrable-correct form;
-production compaction stores only (inserts since last delete, last
-update, last delete offset) — O(live rows) instead of O(events) — the
-emission algebra below is written so that swap is mechanical.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
@@ -30,27 +29,45 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "id long, value double, n_rows long, version long"
-STATE_SCHEMA = "offsets array<long>, ops array<string>, vals array<double>, version long"
+STATE_SCHEMA = (
+    "last_delete long, update_offset long, update_value double, "
+    "insert_offsets array<long>, insert_values array<double>, version long"
+)
+
+# (last_delete, update_offset, update_value, insert_offsets, insert_values)
+EMPTY = (-1, -1, float("nan"), [], [])
 
 
-def _strict_multiset(events: list[tuple[int, str, float]]) -> dict[float, int]:
-    """Serial strict replay of one key's (sorted) log → {value: row_count}.
-    Mirrors operators.cdc.CDC_STRICT_ORACLE."""
-    last_delete = -1
-    inserts: list[tuple[int, float]] = []
-    last_update: tuple[int, float] | None = None
+def _compact(state: tuple, events: Iterable[tuple[int, str, float]]) -> tuple:
+    """Fold one key's new (offset, op, value) events into its compacted
+    state, in any order."""
+    last_delete, update_offset, update_value, offsets, values = state
+    inserts = list(zip(offsets, values))
     for off, op, val in events:
         if op == "d":
-            last_delete = off
+            last_delete = max(last_delete, off)
         elif op in ("c", "r"):
             inserts.append((off, val))
-        elif op == "u":
-            last_update = (off, val)
+        elif op == "u" and off > update_offset:
+            update_offset, update_value = off, val
+    live = [(off, val) for off, val in inserts if off > last_delete]
+    return (
+        last_delete,
+        update_offset,
+        update_value,
+        [off for off, _ in live],
+        [val for _, val in live],
+    )
+
+
+def _strict_multiset(state: tuple) -> dict[float, int]:
+    """A compacted state → {value: row_count}: each live insert, valued at
+    the last update if that came after it. Mirrors
+    operators.cdc.CDC_STRICT_ORACLE."""
+    _, update_offset, update_value, offsets, values = state
     out: dict[float, int] = {}
-    for off, val in inserts:
-        if off <= last_delete:
-            continue
-        eff = last_update[1] if last_update and last_update[0] > off else val
+    for off, val in zip(offsets, values):
+        eff = update_value if update_offset > off else val
         out[eff] = out.get(eff, 0) + 1
     return out
 
@@ -58,18 +75,19 @@ def _strict_multiset(events: list[tuple[int, str, float]]) -> dict[float, int]:
 def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
     (kid,) = key
     if state.exists:
-        offsets, ops, vals, version = state.get
-        offsets, ops, vals = list(offsets), list(ops), list(vals)
+        *compacted, version = state.get
     else:
-        offsets, ops, vals, version = [], [], [], 0
+        compacted, version = EMPTY, 0
     for pdf in pdfs:
-        offsets.extend(int(x) for x in pdf["offset"])
-        ops.extend(pdf["op"])
-        vals.extend(float(x) if pd.notna(x) else float("nan") for x in pdf["value"])
+        events = zip(
+            (int(x) for x in pdf["offset"]),
+            pdf["op"],
+            (float(x) if pd.notna(x) else float("nan") for x in pdf["value"]),
+        )
+        compacted = _compact(compacted, events)
     version += 1
-    state.update((offsets, ops, vals, version))
-    log = sorted(zip(offsets, ops, vals))
-    multiset = _strict_multiset(log)
+    state.update((*compacted, version))
+    multiset = _strict_multiset(compacted)
     if multiset:
         yield pd.DataFrame(
             {

@@ -55,6 +55,51 @@ def test_decode_vectors(spark):
     assert by_off[5].is_malformed and not by_off[0].is_malformed
 
 
+NULL_KEY_ROWS = [
+    ("1", env("c", None, {"id": 1, "value": 10.0, "ts": "x"}), 0),
+    ("4", env("d", None, None), 1),  # delete with no before image
+    ("2", env("c", None, {"value": 20.0, "ts": "x"}), 2),  # no id in after
+    ("3", env("u", {}, {"id": None, "value": 30.0, "ts": "y"}), 3),  # null id in both
+]
+
+
+def test_null_key_is_malformed(spark):
+    """A well-formed envelope whose images carry no ``id`` has nowhere to
+    merge: it is flagged, and the replica never holds a null-key row."""
+    raw = raw_df(spark, NULL_KEY_ROWS)
+    out = {r.offset: r for r in decode_envelope(raw).collect()}
+    assert [out[o].is_malformed for o in range(4)] == [False, True, True, True]
+    assert [r.id for r in final_state_upsert(decode_envelope(raw)).collect()] == [1]
+
+
+def test_null_key_goes_to_dead_letters_in_stream(spark, tmp_path):
+    from debezium_cdc_kafka_spark.streaming.cdc_stream import (
+        ParquetSnapshotTarget,
+        file_change_stream,
+        run_cdc_stream,
+    )
+
+    env_dir = str(tmp_path / "env")
+    raw_df(spark, NULL_KEY_ROWS).coalesce(1).write.parquet(env_dir)
+    dl_dir = str(tmp_path / "dead_letter")
+    q = run_cdc_stream(
+        spark,
+        file_change_stream(spark, env_dir),
+        str(tmp_path / "target"),
+        str(tmp_path / "ckpt"),
+        dead_letter_path=dl_dir,
+    )
+    q.awaitTermination(120)
+    target = ParquetSnapshotTarget(str(tmp_path / "target"))
+    assert [r.id for r in target.read_view(spark).collect()] == [1]
+    dead = spark.read.parquet(dl_dir).collect()
+    assert sorted((r.offset, r.reason) for r in dead) == [
+        (1, "malformed"),
+        (2, "malformed"),
+        (3, "malformed"),
+    ]
+
+
 def test_unknown_op_raises(spark):
     """C9 strictness: postgres.py:260–261 raises RuntimeError on unknown op."""
     bad = raw_df(spark, [("1", env("z", None, {"id": 1, "value": 1.0, "ts": "x"}), 0)])

@@ -107,6 +107,7 @@ REGATE_OK: set[str] = {
     "cdc_op_mix_drift",
     "cdc_hot_keys",
     "cdc_key_lifecycle",
+    "q_sessionize_30m",
     # previous window (q_math_functions, r3 rows)
     "q_math_functions",
     "ann_bruteforce_topk",
@@ -131,7 +132,6 @@ REGATE_OK: set[str] = {
     "q_bm25_search",
     "q_doc_chunking",
     "q_embedding_covariance",
-    "q_label_centroid_outliers",
 }
 
 

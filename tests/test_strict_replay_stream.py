@@ -44,3 +44,24 @@ def test_streaming_strict_replay_matches_batch(spark, tmp_path):
     }
     assert got == expected
     assert len(got) > 0
+
+
+def test_strict_replay_state_keeps_no_deleted_inserts():
+    """Compaction: once a delete covers every insert of a key, its state
+    holds no inserts, whatever order the events folded in."""
+    from debezium_cdc_kafka_spark.streaming.strict_replay import (
+        EMPTY,
+        _compact,
+        _strict_multiset,
+    )
+
+    state = _compact(EMPTY, [(2, "c", 1.0), (4, "c", 2.0), (6, "u", 3.0)])
+    assert state[3] == [2, 4]
+    assert _strict_multiset(state) == {3.0: 2}
+    state = _compact(state, [(8, "d", float("nan"))])
+    assert state[3] == [] and state[4] == []
+    assert _strict_multiset(state) == {}
+    # a late insert below the delete is dropped on arrival; a later one lives
+    state = _compact(state, [(10, "c", 5.0), (1, "c", 0.5)])
+    assert state[3] == [10]
+    assert _strict_multiset(state) == {5.0: 1}
