@@ -160,8 +160,8 @@ def derive_change_events(
     (user_id, ~1.2k distinct at sf0.1) models the reference's
     update-heavy customers table; ``key_col="event_id"`` models the
     autoincrement-PK INSERT-heavy table (every event a new key, keys
-    monotone with offset) — the workload bench_stream.py uses to measure
-    the range-bucketed target. Oracles and tests all use the default.
+    monotone with offset), where the replica's state grows with the
+    stream. Oracles and tests all use the default.
     """
     ev = load_table(spark, sf_dir, "events")
     op = op_expr()

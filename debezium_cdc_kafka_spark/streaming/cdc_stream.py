@@ -54,17 +54,6 @@ from ..sources.cdc_events import RECORD_SCHEMA
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
 
-def committed_versions(path: str) -> list[int]:
-    """Sorted epochs with a committed ``<path>/v=<epoch>/_SUCCESS``: the
-    version listing of every versioned snapshot target."""
-    out = []
-    for name in os.listdir(path):
-        m = _VERSION_RE.match(name)
-        if m and os.path.exists(os.path.join(path, name, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 class ParquetSnapshotTarget:
     """Mutable keyed table over immutable Parquet: version-per-epoch commits.
 
@@ -82,7 +71,13 @@ class ParquetSnapshotTarget:
         os.makedirs(path, exist_ok=True)
 
     def versions(self) -> list[int]:
-        return committed_versions(self.path)
+        """Sorted epochs with a committed ``v=<epoch>/_SUCCESS``."""
+        out = []
+        for name in os.listdir(self.path):
+            m = _VERSION_RE.match(name)
+            if m and os.path.exists(os.path.join(self.path, name, "_SUCCESS")):
+                out.append(int(m.group(1)))
+        return sorted(out)
 
     def read(self, spark: SparkSession, before_version: int | None = None) -> DataFrame:
         """Full stored state (incl. tombstones); use `read_view` for the
@@ -186,8 +181,8 @@ def run_cdc_stream(
     backfills); ``False`` runs continuously with a 1 s trigger, matching
     the reference's poll cadence (consumer.py:55). ``target`` may be any
     object with a state ``schema`` and ``merge_epoch(changes, epoch_id)``
-    (e.g. bucketed.BucketedSnapshotTarget); default is the events-derived
-    table's ParquetSnapshotTarget at ``target_path``.
+    (e.g. a wrapper that traces a ParquetSnapshotTarget); default is the
+    events-derived table's ParquetSnapshotTarget at ``target_path``.
     """
     if target is None:
         target = ParquetSnapshotTarget(target_path)
@@ -217,8 +212,8 @@ def file_change_stream(
     analogue of Kafka's maxOffsetsPerTrigger. 1 maximizes per-epoch
     isolation (the replay/retry tests' shape); larger values amortize the
     per-batch fixed costs (plan, checkpoint commit, target version) over
-    more rows — the trigger-knee sweep in bench_stream.py measures where
-    that amortization stops paying."""
+    more rows — bench_stream.py drains one topic at several values of it
+    to measure where that amortization stops paying."""
     return (
         spark.readStream.schema(RECORD_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -21,9 +21,8 @@ and overwrites its own version — same math, same result).
 
 Cost per epoch is O(|batch| + touched keys), not O(table): the semi
 join against batch keys broadcasts the (small) key set, and on a real
-cluster with the target key-partitioned (e.g. `bucketed.py`), the
-old/new state reads prune to the touched files — the same files the MERGE
-rewrites anyway. Totals are exact integer cents (see functions/money.py
+cluster with the target key-partitioned, the old/new state reads would
+prune to the touched files — the same files the MERGE rewrites anyway. Totals are exact integer cents (see functions/money.py
 rationale), so no float drift accumulates across epochs.
 
 Reference trace: this upgrades the reference's per-row apply loop

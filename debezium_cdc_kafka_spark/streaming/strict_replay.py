@@ -9,8 +9,8 @@ operator, so this is the engine's one Python state machine (the other
 per-key streams are Spark aggregates, streaming/stateful.py).
 
 - state per key = only what the multiset reads: the highest delete
-  offset, the update with the highest offset, the inserts above that
-  delete, and ``version``. O(live rows) per key, not O(events): an insert
+  offset, the non-null update with the highest offset, the inserts above
+  that delete, and ``version``. O(live rows) per key, not O(events): an insert
   at or below the delete offset can never come back, so it is dropped.
   Every field is a max or a filter against a max, so late or out-of-order
   micro-batches fold to the same state — the batch monoid's guarantee.
@@ -34,13 +34,15 @@ STATE_SCHEMA = (
     "insert_offsets array<long>, insert_values array<double>, version long"
 )
 
-# (last_delete, update_offset, update_value, insert_offsets, insert_values)
-EMPTY = (-1, -1, float("nan"), [], [])
+# (last_delete, update_offset, update_value, insert_offsets, insert_values);
+# a null value is carried as None, so null inserts count as one value
+EMPTY = (-1, -1, None, [], [])
 
 
 def _compact(state: tuple, events: Iterable[tuple[int, str, float]]) -> tuple:
     """Fold one key's new (offset, op, value) events into its compacted
-    state, in any order."""
+    state, in any order. A null-valued update sets nothing: the oracle's
+    ``first_value(... IGNORE NULLS)`` skips it."""
     last_delete, update_offset, update_value, offsets, values = state
     inserts = list(zip(offsets, values))
     for off, op, val in events:
@@ -48,7 +50,7 @@ def _compact(state: tuple, events: Iterable[tuple[int, str, float]]) -> tuple:
             last_delete = max(last_delete, off)
         elif op in ("c", "r"):
             inserts.append((off, val))
-        elif op == "u" and off > update_offset:
+        elif op == "u" and val is not None and off > update_offset:
             update_offset, update_value = off, val
     live = [(off, val) for off, val in inserts if off > last_delete]
     return (
@@ -82,7 +84,7 @@ def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iter
         events = zip(
             (int(x) for x in pdf["offset"]),
             pdf["op"],
-            (float(x) if pd.notna(x) else float("nan") for x in pdf["value"]),
+            (float(x) if pd.notna(x) else None for x in pdf["value"]),
         )
         compacted = _compact(compacted, events)
     version += 1
