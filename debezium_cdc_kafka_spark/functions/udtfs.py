@@ -2,10 +2,8 @@
 
 Completes the user-function matrix from SURVEY §2.6: scalar `udf`,
 Arrow `pandas_udf` (operators/stats.py), grouped `applyInPandas` /
-`mapInPandas` (multimodal), the per-key state machine of
-streaming/strict_replay.py (the one stream state a Spark aggregate
-cannot keep) — and here the table-valued form: one input row
-→ N output rows, usable in SQL FROM/LATERAL position.
+`mapInPandas` (multimodal) — and here the table-valued form: one input
+row → N output rows, usable in SQL FROM/LATERAL position.
 
 The demo UDTF emits the same sliding chunk spans as the pure-column
 q_doc_chunking (operators/text.py), and test_udtf.py proves the two

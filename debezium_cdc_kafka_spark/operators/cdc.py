@@ -19,7 +19,8 @@ Two semantic modes, both oracle-tested:
   existing key duplicates the row; UPDATE/DELETE touch all rows of a key;
   UPDATE/DELETE on a missing key are no-ops. Final multiset per key =
   inserts since the last delete, each carrying the value of the last
-  subsequent update (window algebra below — still no per-row Python).
+  subsequent update (`strict_replay`: per-key aggregates plus one array
+  expression, shared by the batch query and the stream).
 
 Scale notes: every step is a narrow projection, a window over the key, or
 a key-partitioned join — at 100 TB the only shuffle is on the CDC key
@@ -287,10 +288,62 @@ SELECT id, value, count(*) AS n_rows
 FROM (
   SELECT user_id AS id, round(coalesce(last_update_value, value), 2) AS value
   FROM annotated
-  WHERE op = 'c' AND event_id > coalesce(last_delete, -1)
+  WHERE op IN ('c', 'r') AND event_id > coalesce(last_delete, -1)
 )
 GROUP BY id, value
 """
+
+
+def strict_replay(changes: DataFrame) -> DataFrame:
+    """Well-formed decoded change events → one row per key of the
+    reference's no-PK replay: (id, multiset, version), the multiset an
+    array of (value, n_rows).
+
+    The key's state is four aggregates, each a max, a count or a list, so
+    events fold to the same row in any order and over any split into
+    micro-batches:
+
+    - ``last_delete``: the highest delete offset;
+    - ``last_update``: the (offset, value) of the highest-offset update
+      with a non-null value (``max_by`` skips a null ordering, and the
+      oracle's ``first_value(... IGNORE NULLS)`` skips a null update);
+    - ``inserts``: every ``c``/``r`` event's (offset, value);
+    - ``version``: the key's event count, which rises with every emission
+      of the key in an update-mode stream.
+
+    The multiset keeps the inserts above the last delete, values each at
+    the last update if that came after it, rounded to cents, and counts
+    the rows of each distinct value (null counts as one value). Inserts a
+    later delete covers stay in ``inserts``: a stream's state holds every
+    insert of the key, not only the live ones."""
+    op, offset, value = F.col("op"), F.col("offset"), F.col("after.value")
+    event = F.struct(offset.alias("offset"), value.alias("value"))
+    keyed = changes.groupBy("id").agg(
+        F.max(F.when(op == "d", offset)).alias("last_delete"),
+        F.max_by(event, F.when((op == "u") & value.isNotNull(), offset)).alias("last_update"),
+        F.collect_list(F.when(op.isin("c", "r"), event)).alias("inserts"),
+        F.count(F.lit(1)).alias("version"),
+    )
+    update = F.col("last_update")
+    live = F.filter(
+        "inserts", lambda i: i["offset"] > F.coalesce(F.col("last_delete"), F.lit(-1))
+    )
+    values = F.transform(
+        live,
+        lambda i: F.round(
+            F.when(update["offset"] > i["offset"], update["value"]).otherwise(i["value"]), 2
+        ),
+    )
+    multiset = F.transform(
+        F.array_distinct("values"),
+        lambda v: F.struct(
+            v.alias("value"),
+            F.size(F.filter("values", lambda y: y.eqNullSafe(v))).cast("long").alias("n_rows"),
+        ),
+    )
+    return keyed.select("id", values.alias("values"), "version").select(
+        "id", multiset.alias("multiset"), "version"
+    )
 
 
 @query("cdc_strict_replay_state", CDC_STRICT_ORACLE)
@@ -299,39 +352,19 @@ def cdc_strict_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - the target has no PK (postgres.py:100–107) → repeated inserts for a
       live key DUPLICATE the row; `n_rows` counts them;
+    - a snapshot read (``r``) inserts like a create (postgres.py:254–255);
     - UPDATE rewrites every duplicate (postgres.py:173–178 keys on id);
     - UPDATE/DELETE on an absent key are no-ops (0-row DML doesn't error);
     - DELETE removes all rows of the key (postgres.py:214–219).
 
-    Final multiset per key = inserts after the last delete, valued at the
-    last subsequent update (or their own insert image). Computed with two
-    windows — no serial replay, no Python loop, shuffles only on the key.
-    """
+    One row per (key, value) of `strict_replay`'s multiset: one aggregate,
+    one shuffle on the key, no serial replay and no Python loop. The
+    strict stream (`streaming.stateful.strict_replay_stream`) runs the
+    same aggregate."""
     raw = derive_change_events(spark, sf_dir)
-    ch = well_formed(decode_envelope(raw)).select(
-        "id", "op", "offset", F.col("after.value").alias("value")
-    )
-    w_key = W.partitionBy("id")
-    w_desc = (
-        W.partitionBy("id")
-        .orderBy(F.col("offset").desc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    annotated = ch.withColumn(
-        "last_delete", F.max(F.when(F.col("op") == "d", F.col("offset"))).over(w_key)
-    ).withColumn(
-        "last_update_value",
-        F.first(F.when(F.col("op") == "u", F.col("value")), ignorenulls=True).over(w_desc),
-    )
-    live_inserts = annotated.filter(
-        (F.col("op") == "c") & (F.col("offset") > F.coalesce(F.col("last_delete"), F.lit(-1)))
-    )
-    return (
-        live_inserts.select(
-            "id", F.round(F.coalesce("last_update_value", "value"), 2).alias("value")
-        )
-        .groupBy("id", "value")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
+    per_key = strict_replay(well_formed(decode_envelope(raw)))
+    return per_key.select("id", F.explode("multiset").alias("m")).select(
+        "id", "m.value", "m.n_rows"
     )
 
 

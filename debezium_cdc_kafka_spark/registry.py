@@ -88,9 +88,11 @@ def _modules():
 # (its parse moved into a one-element explode so a well-formed filter no
 # longer parses each record twice, and a record with a null key is now
 # malformed), and q_sessionize_30m (its aggregates moved to
-# `windows.session_row_aggs`, shared with the session stream). Then the
-# previous window in its order (q_math_functions and the oldest r3
-# rows), truncated to 50 slots.
+# `windows.session_row_aggs`, shared with the session stream).
+# cdc_strict_replay_state and cdc_anomaly_audit, built on it, now run
+# `cdc.strict_replay`, the per-key aggregate the strict stream shares.
+# Then the previous window in its order (q_math_functions and the oldest
+# r3 rows), truncated to 50 slots.
 GATE_ORDER: list[str] = [
     # --- changed-code re-gates (code changed after last driver row) ---
     "ann_pq_adc",
@@ -115,6 +117,7 @@ GATE_ORDER: list[str] = [
     "cdc_final_state",
     "cdc_op_counts",
     "cdc_strict_replay_state",
+    "cdc_anomaly_audit",
     "cdc_tx_consistent_state",
     "cdc_op_mix_drift",
     "cdc_hot_keys",
@@ -130,7 +133,6 @@ GATE_ORDER: list[str] = [
     "ann_lsh_hyperplane",
     "ann_lsh_multiprobe",
     "ann_mmr_rerank",
-    "cdc_anomaly_audit",
     "dedup_clusters",
     "dedup_embedding_cosine",
     "dedup_exact",

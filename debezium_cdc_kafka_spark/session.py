@@ -36,7 +36,14 @@ def get_spark(
     app_name: str = "debezium_cdc_kafka_spark",
     cpus: str | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build the session, or return the live one untouched.
+
+    A live session keeps its settings: ``getOrCreate`` would re-apply the
+    runtime confs below to it (``applyModifiableSettings``), so a caller
+    asking for another core count would change the shuffle width of every
+    other caller sharing the session. The check is the one
+    ``getOrCreate`` makes, on Python attributes only, so it costs nothing
+    when no session is live (a stopped session clears them).
 
     Notes for cluster scale:
     - ``spark.sql.shuffle.partitions`` is set to the local core count here;
@@ -47,6 +54,9 @@ def get_spark(
     - Session timezone pinned to UTC so timestamps hash identically against
       the DuckDB oracle (DuckDB timestamps are UTC-naive).
     """
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     n = cpus or DEFAULT_CPUS
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (

@@ -10,7 +10,7 @@ from debezium_cdc_kafka_spark.oracle_check import duckdb_connect
 from debezium_cdc_kafka_spark.session import get_spark
 
 # Before the JVM starts: local-mode Python workers inherit this environment
-# and unpickle package functions (e.g. strict_replay._update) by
+# and unpickle package functions (mapInPandas bodies, pandas_udfs) by
 # reference, so the repo root must be importable whatever the cwd.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 os.environ["PYTHONPATH"] = os.pathsep.join(

@@ -10,15 +10,9 @@ from tests.conftest import SF_SMOKE
 
 
 def test_bench_stream_smoke(spark, tmp_path, capsys):
-    # bench_stream's get_spark re-applies its shuffle width to this
-    # shared session; put the tests' width back afterwards
-    width = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        rc = bench_stream.main(
-            ["--reps", "1", "--sf", SF_SMOKE, "--workdir", str(tmp_path / "work")]
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", width)
+    rc = bench_stream.main(
+        ["--reps", "1", "--sf", SF_SMOKE, "--workdir", str(tmp_path / "work")]
+    )
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert list(out["configs"]) == [str(m) for m in bench_stream.MAX_FILES_PER_TRIGGER]

@@ -1,8 +1,8 @@
 """Cogrouped applyInPandas: the two-sided grouped-Pandas API (the last
 uncovered corner of the Python UDF matrix — scalar pandas_udf, grouped
-applyInPandas/mapInPandas, stateful applyInPandasWithState, and UDTF are
-covered elsewhere). The pandas cogroup must reproduce exactly what the
-equivalent JVM join+aggregate computes."""
+applyInPandas/mapInPandas and UDTF are covered elsewhere). The pandas
+cogroup must reproduce exactly what the equivalent JVM join+aggregate
+computes."""
 
 from __future__ import annotations
 

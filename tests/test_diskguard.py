@@ -36,12 +36,10 @@ def test_preflight_refuses_without_headroom():
         preflight(impossible)
 
 
-def test_watchdog_start_refuses_below_floor():
+def test_watchdog_start_refuses_below_floor(spark):
     """Floor already crossed at start(): trip synchronously, don't race
     the first job against the sampler."""
-    from debezium_cdc_kafka_spark.session import get_spark
-
-    wd = SpillWatchdog(get_spark(), min_free_gb=_gb(free_bytes()) + 1024.0)
+    wd = SpillWatchdog(spark, min_free_gb=_gb(free_bytes()) + 1024.0)
     with pytest.raises(DiskBudgetError, match="below"):
         wd.start()
     assert wd.tripped

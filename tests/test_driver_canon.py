@@ -103,6 +103,7 @@ REGATE_OK: set[str] = {
     "cdc_final_state",
     "cdc_op_counts",
     "cdc_strict_replay_state",
+    "cdc_anomaly_audit",
     "cdc_tx_consistent_state",
     "cdc_op_mix_drift",
     "cdc_hot_keys",
@@ -118,7 +119,6 @@ REGATE_OK: set[str] = {
     "ann_lsh_hyperplane",
     "ann_lsh_multiprobe",
     "ann_mmr_rerank",
-    "cdc_anomaly_audit",
     "dedup_clusters",
     "dedup_embedding_cosine",
     "dedup_exact",

@@ -1,7 +1,8 @@
 """Fixed costs the session settings remove (`session.get_spark`): classes
 recompiled because the generated-class cache is too small, py4j round
 trips spent capturing Python call sites, and a batch CDC query that parses
-every record twice."""
+every record twice. Also: a second `get_spark` leaves a live session's
+settings alone."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 from debezium_cdc_kafka_spark import registry
 from debezium_cdc_kafka_spark.operators import cdc
 from debezium_cdc_kafka_spark.plans.inspect import codegen_stats, executed_plan
+from debezium_cdc_kafka_spark.session import get_spark
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
 # perfbench's queries_modules set: one pass generates ~180 classes, more
@@ -108,3 +110,10 @@ def test_cdc_final_state_builds_in_few_py4j_commands(spark, monkeypatch):
 def test_batch_cdc_parses_each_record_once(spark):
     plan = executed_plan(cdc.cdc_final_state(spark, SF_ORACLE))
     assert plan.count("from_json(") == 1, plan
+
+
+def test_get_spark_returns_the_live_session_untouched(spark):
+    """Another core count does not re-apply the session's confs: the
+    tests' 8 shuffle partitions stay."""
+    assert get_spark("x", cpus="3") is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
