@@ -17,10 +17,12 @@ directory (the "topic") and a snapshot target (the "replica"):
 tests and demos run without a broker; swap `file_change_stream` for
 `sources.kafka.kafka_change_stream` and the generator for
 `workload_rate_stream` to run against a real Kafka topic — nothing else
-changes: both generators publish customers rows through the one encoder
-(`sources.cdc_events.envelope_json`), and the consumer decodes them under
-the envelope derived from the one declaration of the table,
-`sources.workload.CUSTOMERS_STATE_SCHEMA`.
+changes: the batch and live generators are one column expression
+(`sources.workload.customers_records`) over `spark.range` or the `rate`
+source, so they publish the same customers record for the same ``seq``
+through the one encoder (`sources.cdc_events.envelope_json`), and the
+consumer decodes them under the envelope derived from the one
+declaration of the table, `sources.workload.CUSTOMERS_STATE_SCHEMA`.
 """
 
 from __future__ import annotations

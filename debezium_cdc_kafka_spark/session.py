@@ -70,9 +70,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python-worker connect-back timeout (default 15s): on a fully
-        # loaded box, forking+importing a Python worker for a Python
-        # DataSource / pandas-UDF stage can exceed 15s and fail the whole
-        # query with SocketTimeoutException even though nothing is wrong
+        # loaded box, forking+importing a Python worker for a pandas-UDF
+        # stage can exceed 15s and fail the whole query with
+        # SocketTimeoutException even though nothing is wrong
         # (observed once in r6's full-suite run while a concurrent Spark
         # job saturated all 32 cores). 120s makes worker spawn robust to
         # CPU contention; it costs nothing when the box is idle because

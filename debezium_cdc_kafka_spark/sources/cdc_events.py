@@ -108,8 +108,9 @@ def envelope_json(
     """One Debezium JSON envelope per row — the encoder every generator
     shares. ``after`` maps each after-image column of ``state_schema`` to
     its value; a missing or extra column raises, so a generator cannot
-    publish rows of another table's shape. c/u carry the after-image,
-    d carries ``before = {id}``."""
+    publish rows of another table's shape. c/r/u carry the after-image
+    (a snapshot read ships the row like an insert), d carries
+    ``before = {id}``."""
     names = after_image(state_schema).names
     if set(after) != set(names):
         raise ValueError(f"after-image columns {sorted(after)} != declared {names}")
@@ -119,7 +120,7 @@ def envelope_json(
             F.struct(
                 op.alias("op"),
                 F.when(op == "d", F.struct(after["id"].alias("id"))).alias("before"),
-                F.when(op.isin("c", "u"), image).alias("after"),
+                F.when(op.isin("c", "r", "u"), image).alias("after"),
                 ts_ms.alias("ts_ms"),
             ).alias("payload")
         )

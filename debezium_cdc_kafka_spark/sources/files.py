@@ -49,36 +49,3 @@ def read_interchange(spark: SparkSession, path: str, fmt: str, schema) -> DataFr
         r = r.option("timestampFormat", TS_FMT)
     return r.load(path)
 
-
-# ---------------------------------------------------------------------------
-# Legacy per-format helpers (pre-interchange API; kept for the schema-
-# evolution tests and any caller that wants PERMISSIVE containment).
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import types as T  # noqa: E402
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Headered CSV with explicit schema; malformed lines are contained in
-    PERMISSIVE mode (nulled columns), mirroring the CDC malformed-message
-    posture rather than failing the scan."""
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """JSON-lines with explicit schema. Unknown fields are ignored (the
-    schema is the contract), corrupt lines null out under PERMISSIVE."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)

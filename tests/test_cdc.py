@@ -19,6 +19,7 @@ from debezium_cdc_kafka_spark.operators.cdc import (
     final_state_upsert,
     last_event_per_key,
     state_view,
+    strict_replay,
     well_formed,
 )
 from debezium_cdc_kafka_spark.sources.cdc_events import RECORD_SCHEMA, derive_change_events
@@ -168,20 +169,9 @@ def test_duplicate_insert_anomaly(spark):
         ("1", env("c", None, {"id": 1, "value": 1.0, "ts": "a"}), 0),
         ("1", env("c", None, {"id": 1, "value": 1.0, "ts": "a"}), 1),  # redelivered insert
     ]
-    ch = well_formed(decode_envelope(raw_df(spark, rows))).select(
-        "id", "op", "offset", F.col("after.value").alias("value")
-    )
-    # strict multiset: both inserts live
-    from pyspark.sql.window import Window as W
-
-    w_key = W.partitionBy("id")
-    annotated = ch.withColumn(
-        "last_delete", F.max(F.when(F.col("op") == "d", F.col("offset"))).over(w_key)
-    )
-    live = annotated.filter(
-        (F.col("op") == "c") & (F.col("offset") > F.coalesce(F.col("last_delete"), F.lit(-1)))
-    )
-    assert live.count() == 2
+    # strict multiset: both inserts live, one row value counted twice
+    (key,) = strict_replay(well_formed(decode_envelope(raw_df(spark, rows)))).collect()
+    assert [(m.value, m.n_rows) for m in key.multiset] == [(1.0, 2)]
     # upsert mode collapses them — the documented effectively-once upgrade
     assert final_state_upsert(decode_envelope(raw_df(spark, rows))).count() == 1
 

@@ -6,9 +6,10 @@ under that schema, a producer's records are well-formed (except the
 events stream's deliberate corrupt bodies) and every insert/update
 carries its after-image: a producer that publishes another table's row
 shape shows up as c/u rows whose after-image columns are all null. The
-producers are the four generators, the file transport that stands in for
-the broker, and the Kafka source's normalisation, run over a frame shaped
-like the source's output (no broker ships here).
+producers are the events-derived stream, the customers workload's batch
+and live forms, the file transport that stands in for the broker, and
+the Kafka source's normalisation, run over a frame shaped like the
+source's output (no broker ships here).
 """
 
 from __future__ import annotations
@@ -18,7 +19,12 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from debezium_cdc_kafka_spark.operators.cdc import after_columns, decode_envelope
+from debezium_cdc_kafka_spark.operators.cdc import (
+    after_columns,
+    decode_envelope,
+    strict_replay,
+    well_formed,
+)
 from debezium_cdc_kafka_spark.sources.cdc_events import (
     MALFORMED_MOD,
     MALFORMED_REM,
@@ -28,7 +34,6 @@ from debezium_cdc_kafka_spark.sources.cdc_events import (
     envelope_json,
     kafka_record,
 )
-from debezium_cdc_kafka_spark.sources.pydatasource import DebeziumWorkloadDataSource
 from debezium_cdc_kafka_spark.sources.workload import (
     CUSTOMERS_STATE_SCHEMA,
     workload_change_events,
@@ -55,16 +60,6 @@ def _rate_batch(spark, tmp_path):
     q.stop()
     q.awaitTermination(30)
     return spark.sql("SELECT * FROM rate_contract")
-
-
-def _pydatasource_batch(spark, tmp_path):
-    spark.dataSource.register(DebeziumWorkloadDataSource)
-    return (
-        spark.read.format("debezium_workload")
-        .option("n_partitions", "2")
-        .option("rows_per_partition", "50")
-        .load()
-    )
 
 
 def _file_stream_batch(spark, tmp_path):
@@ -121,7 +116,6 @@ PRODUCERS = {
         False,
     ),
     "workload_rate_stream": (_rate_batch, CUSTOMERS_STATE_SCHEMA, False),
-    "DebeziumWorkloadDataSource": (_pydatasource_batch, CUSTOMERS_STATE_SCHEMA, False),
     "file_change_stream": (_file_stream_batch, STATE_SCHEMA, True),
     "kafka_record[Kafka source]": (_kafka_source_batch, STATE_SCHEMA, True),
 }
@@ -172,3 +166,29 @@ def test_encoder_rejects_another_tables_columns(spark):
             {"id": F.lit(1), "value": F.lit(0.0)},
             F.lit(0),
         )
+
+
+def test_snapshot_read_envelope_is_an_insert(spark):
+    """An encoder-built ``r`` (snapshot read) carries its after-image, so
+    it decodes well-formed and strict replay counts it as an insert."""
+    row = spark.range(7, 8)
+    value = envelope_json(
+        STATE_SCHEMA,
+        F.lit("r"),
+        {"id": F.col("id"), "value": F.lit(2.5), "ts": F.lit("t")},
+        F.lit(0),
+    )
+    records = kafka_record(
+        row,
+        key=F.col("id"),
+        value=value,
+        topic=F.lit("t"),
+        partition=F.lit(0),
+        offset=F.lit(0),
+        timestamp=F.lit(None),
+    )
+    (decoded,) = decode_envelope(records).collect()
+    assert (decoded.op, decoded.id, decoded.is_malformed) == ("r", 7, False)
+    assert decoded.after.value == 2.5
+    (key,) = strict_replay(well_formed(decode_envelope(records))).collect()
+    assert [(m.value, m.n_rows) for m in key.multiset] == [(2.5, 1)]

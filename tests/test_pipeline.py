@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
+from debezium_cdc_kafka_spark.operators.cdc import decode_envelope
 from debezium_cdc_kafka_spark.pipeline import expected_final_state, run_pipeline
 from debezium_cdc_kafka_spark.sources.workload import (
-    assign_ops,
+    CUSTOMERS_STATE_SCHEMA,
     synthetic_people,
     workload_change_events,
 )
@@ -29,15 +31,8 @@ def test_synthetic_people_deterministic_and_sanitized(spark):
 def test_anti_double_delete_rule(spark):
     """generate.py:133–134: a delete immediately after a delete (per key)
     is rewritten to an insert — no two consecutive deletes survive."""
-    ops = (
-        spark.range(5000)
-        .select(F.col("id").alias("seq"))
-        .withColumn("person_id", F.col("seq") % 40)
-    )
-    out = assign_ops(ops)
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("person_id").orderBy("seq")
+    out = decode_envelope(workload_change_events(spark, 40, 5000), CUSTOMERS_STATE_SCHEMA)
+    w = W.partitionBy("id").orderBy("offset")
     consecutive = (
         out.withColumn("prev", F.lag("op").over(w))
         .filter((F.col("op") == "d") & (F.col("prev") == "d"))

@@ -7,16 +7,16 @@ import json
 from pyspark.sql import functions as F
 
 from debezium_cdc_kafka_spark.catalog import load_table
-from debezium_cdc_kafka_spark.sources.files import read_csv, read_jsonl, write_csv, write_jsonl
+from debezium_cdc_kafka_spark.sources.files import read_interchange, write_interchange
 from tests.conftest import SF_SMOKE
 
 
 def test_csv_json_roundtrip(spark, tmp_path):
     orig = load_table(spark, SF_SMOKE, "customer")
-    write_csv(orig, str(tmp_path / "c_csv"))
-    write_jsonl(orig, str(tmp_path / "c_json"))
-    from_csv = read_csv(spark, str(tmp_path / "c_csv"), orig.schema)
-    from_json = read_jsonl(spark, str(tmp_path / "c_json"), orig.schema)
+    write_interchange(orig, str(tmp_path / "c_csv"), "csv")
+    write_interchange(orig, str(tmp_path / "c_json"), "json")
+    from_csv = read_interchange(spark, str(tmp_path / "c_csv"), "csv", orig.schema)
+    from_json = read_interchange(spark, str(tmp_path / "c_json"), "json", orig.schema)
     base = {tuple(r) for r in orig.collect()}
     assert {tuple(r) for r in from_csv.collect()} == base
     assert {tuple(r) for r in from_json.collect()} == base
